@@ -57,4 +57,14 @@ object Tables {
     // GC'd — without this, repeated propagation runs in one session
     // accumulate dead round checkpoints on disk forever
     .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
+
+  /** The session and corpus an oracle builder that inlines TRAINED
+    * model literals trains on: the active session (else a small local
+    * one) and the `graft.oracle.sfdir` corpus (default sf0.01). */
+  private[graft] def oracleSession(): (SparkSession, String) = {
+    val spark = SparkSession.getActiveSession.getOrElse(
+      configure(SparkSession.builder().master("local[2]")
+        .config("spark.ui.enabled", "false")).getOrCreate())
+    (spark, sys.props.getOrElse("graft.oracle.sfdir", "/root/testdata/sf0.01"))
+  }
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.functions.TextShingles
+import Similarity.dotSql
 
 /** Corpus-curation operators a large-scale training-data pipeline runs
   * between "cleaned corpus" and "training run": benchmark
@@ -1381,11 +1382,6 @@ object Curation {
   /** DuckDB oracle for [[retrievalFuse]]: the #109 BM25 replay and the
     * brute cosine leg as CTEs, ranked identically, fused with the same
     * fixed-order reciprocal sum. */
-  /** The DuckDB dot-product fragment the retrieval oracles share. */
-  private def dotSql(a: String, b: String): String =
-    s"""list_reduce(list_transform(list_zip($a, $b),
-        x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)), (p, q) -> p + q)"""
-
   def rrfOracle(kc: Int = 60, kLeg: Int = 20, k: Int = 10): String = {
     val dot = dotSql _
     rrfOracleOver(

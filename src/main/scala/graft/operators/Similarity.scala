@@ -54,17 +54,8 @@ object Similarity {
   def annBruteforce(spark: SparkSession, sfDir: String,
                     nQueries: Int = 10, k: Int = 5): DataFrame = {
     val v = vectors(spark, sfDir)
-    val queries = v.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"), col("embedding").as("e_q"),
-        col("nrm").as("n_q"))
-    val cands = v.select(col("vec_id").as("neighbor_id"),
-      col("embedding").as("e_c"), col("nrm").as("n_c"))
-    val scored = cands.join(broadcast(queries),
-        col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        cosineWithNorms(dot(col("e_q"), col("e_c")), col("n_q"), col("n_c"))
-          .as("cos"))
-    rankTopK(scored, k)
+    rankTopK(candidates(candVecs(v),
+      queryVecs(v.filter(col("vec_id") < nQueries)), exactCos), k)
   }
 
   /** §2 #117 — k-NN GRAPH build: every vector's top-k cosine neighbors
@@ -97,15 +88,7 @@ object Similarity {
   private[graft] def knnGraphBrute(spark: SparkSession, sfDir: String,
                                    k: Int = 5): DataFrame = {
     val v = vectors(spark, sfDir)
-    val queries = v.select(col("vec_id").as("query_id"),
-      col("embedding").as("e_q"), col("nrm").as("n_q"))
-    val cands = v.select(col("vec_id").as("neighbor_id"),
-      col("embedding").as("e_c"), col("nrm").as("n_c"))
-    mutualFlag(rankTopK(cands.join(broadcast(queries),
-        col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        cosineWithNorms(dot(col("e_q"), col("e_c")), col("n_q"), col("n_c"))
-          .as("cos")), k))
+    mutualFlag(rankTopK(candidates(candVecs(v), queryVecs(v), exactCos), k))
   }
 
   /** Mutual-edge decoration shared by the graph builds: ONE
@@ -134,8 +117,6 @@ object Similarity {
                   k: Int = 5): DataFrame = {
     val v = vectors(spark, sfDir)
     val cents = staticCentroids()
-    def cellsOf(n: Int) =
-      graft.functions.VectorQuantize.nearestCells(col("embedding"), cents, n)
     // SALTED cell join (guide §2.5): the join key has only nCells
     // distinct values, so the pair-scoring stage — whose cost is pair
     // COMPUTE, not shuffle bytes (AQE coalesces it by bytes down to a
@@ -147,14 +128,10 @@ object Similarity {
     // parallelism (scale-adaptive, never a constant).
     val nSalts = math.max(1,
       2 * v.sparkSession.sparkContext.defaultParallelism / cents.length)
-    val assigned = v.select(element_at(cellsOf(1), 1).as("cell"),
-      col("vec_id").as("neighbor_id"), col("embedding").as("e_c"),
-      col("nrm").as("n_c"))
+    val assigned = ivfLists(v, cents)
       .withColumn("salt",
         pmod(xxhash64(col("neighbor_id")), lit(nSalts.toLong)).cast("int"))
-    val probes = v.select(col("vec_id").as("query_id"),
-      col("embedding").as("e_q"), col("nrm").as("n_q"),
-      explode(cellsOf(nProbe)).as("cell"))
+    val probes = probeFrame(v, cents, nProbe)
       .withColumn("salt",
         explode(typedLit(List.range(0, nSalts))))
     // explicit partition count: AQE's BYTE-based coalescing would fold
@@ -169,8 +146,7 @@ object Similarity {
           Seq("cell", "salt"))
         .filter(col("query_id") =!= col("neighbor_id"))
         .select(col("query_id"), col("neighbor_id"),
-          cosineWithNorms(dot(col("e_q"), col("e_c")), col("n_q"), col("n_c"))
-            .as("cos")), k))
+          exactCos.as("cos")), k))
   }
 
   /** DuckDB oracle for [[knnGraphAnn]]: static centroids inlined,
@@ -178,19 +154,16 @@ object Similarity {
     * machinery with every vector as a query) plus the mutual
     * self-join. */
   def knnGraphAnnOracle(nProbe: Int = 6, k: Int = 5): String = {
-    val dot = (a: String, b: String) =>
-      s"""list_reduce(list_transform(list_zip($a, $b),
-          x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)), (p, q) -> p + q)"""
     val centRows = staticCentroids().zipWithIndex.map { case (c, i) =>
       s"(${i}, ${c.mkString("[", ", ", "]")})"
     }.mkString(", ")
     s"""WITH n AS (SELECT vec_id, embedding,
-          sqrt(${dot("embedding", "embedding")}) AS nrm FROM embeddings),
+          sqrt(${dotSql("embedding", "embedding")}) AS nrm FROM embeddings),
         cents(cell, cv) AS (VALUES $centRows),
         ranked AS (
           SELECT v.vec_id, v.embedding, v.nrm, c.cell,
             row_number() OVER (PARTITION BY v.vec_id ORDER BY
-              ${dot("v.embedding", "c.cv")} DESC, c.cell) AS crnk
+              ${dotSql("v.embedding", "c.cv")} DESC, c.cell) AS crnk
           FROM n v, cents c),
         assigned AS (SELECT cell, vec_id AS neighbor_id, embedding AS e_c,
                        nrm AS n_c FROM ranked WHERE crnk = 1),
@@ -199,9 +172,9 @@ object Similarity {
         e AS (
           SELECT query_id, neighbor_id, rnk, cos FROM (
             SELECT p.query_id, a.neighbor_id,
-              ${dot("p.e_q", "a.e_c")} / (p.n_q * a.n_c) AS cos,
+              ${dotSql("p.e_q", "a.e_c")} / (p.n_q * a.n_c) AS cos,
               CAST(row_number() OVER (PARTITION BY p.query_id ORDER BY
-                ${dot("p.e_q", "a.e_c")} / (p.n_q * a.n_c) DESC,
+                ${dotSql("p.e_q", "a.e_c")} / (p.n_q * a.n_c) DESC,
                 a.neighbor_id) AS INTEGER) AS rnk
             FROM probes p JOIN assigned a ON p.cell = a.cell
             WHERE p.query_id <> a.neighbor_id)
@@ -241,8 +214,7 @@ object Similarity {
       col("embedding").as("e_c"), col("nrm").as("n_c"))
     val edges = rankTopK(queries.join(broadcast(cands))
       .select(col("query_id"), col("neighbor_id"),
-        cosineWithNorms(dot(col("e_q"), col("e_c")), col("n_q"), col("n_c"))
-          .as("cos")), k)
+        exactCos.as("cos")), k)
     val seedLabels = seeds.select(col("vec_id").as("neighbor_id"),
       col("label").as("nb_label"))
     val pred = edges.join(broadcast(seedLabels), "neighbor_id")
@@ -267,17 +239,14 @@ object Similarity {
   /** DuckDB oracle for [[labelSpread]]: the same rank/vote/argmax
     * chain replayed with window functions. */
   def labelSpreadOracle(k: Int = 5, seedMod: Int = 5): String = {
-    val dot = (a: String, b: String) =>
-      s"""list_reduce(list_transform(list_zip($a, $b),
-          x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)), (p, q) -> p + q)"""
     s"""WITH n AS (SELECT vec_id, label, embedding,
-          sqrt(${dot("embedding", "embedding")}) AS nrm FROM embeddings),
+          sqrt(${dotSql("embedding", "embedding")}) AS nrm FROM embeddings),
         sd AS (SELECT * FROM n WHERE vec_id % $seedMod = 0),
         qs AS (SELECT * FROM n WHERE vec_id % $seedMod <> 0),
         e AS (SELECT query_id, nb_label FROM (
             SELECT q.vec_id AS query_id, s.label AS nb_label,
               row_number() OVER (PARTITION BY q.vec_id ORDER BY
-                ${dot("q.embedding", "s.embedding")} / (q.nrm * s.nrm) DESC,
+                ${dotSql("q.embedding", "s.embedding")} / (q.nrm * s.nrm) DESC,
                 s.vec_id) AS rnk
             FROM qs q JOIN sd s ON true)
           WHERE rnk <= $k),
@@ -380,7 +349,7 @@ object Similarity {
     def cellsOf(n: Int) =
       graft.functions.VectorQuantize.nearestCells(col("embedding"), cents, n)
     val cellCounts = graft.operators.TransientCaches.register(v
-      .select(element_at(cellsOf(1), 1).as("cell"))
+      .select(cellOf(cents))
       .groupBy("cell").agg(count(lit(1)).as("cnt"))
       .persist(StorageLevel.MEMORY_AND_DISK))
     cellCounts.count()
@@ -409,9 +378,6 @@ object Similarity {
     * with one branch per probe setting, all off shared CTEs. */
   def ivfProbeSweepOracle(nQueries: Int = 10, k: Int = 5): String = {
     val cents = staticCentroids()
-    val dot = (a: String, b: String) =>
-      s"""list_reduce(list_transform(list_zip($a, $b),
-          x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)), (p, q) -> p + q)"""
     val centRows = cents.zipWithIndex.map { case (c, i) =>
       s"(${i}, ${c.mkString("[", ", ", "]")})"
     }.mkString(", ")
@@ -421,7 +387,7 @@ object Similarity {
            (SELECT count(*)
             FROM (SELECT pr.query_id, a.neighbor_id,
                     row_number() OVER (PARTITION BY pr.query_id ORDER BY
-                      ${dot("pr.e_q", "a.e_c")} / (pr.n_q * a.n_c) DESC,
+                      ${dotSql("pr.e_q", "a.e_c")} / (pr.n_q * a.n_c) DESC,
                       a.neighbor_id) AS rnk
                   FROM (SELECT cell, vec_id AS query_id, embedding AS e_q,
                           nrm AS n_q
@@ -438,12 +404,12 @@ object Similarity {
             JOIN cc USING (cell)) AS n_candidates"""
     }.mkString("\n          UNION ALL\n          ")
     s"""WITH n AS (SELECT vec_id, embedding,
-          sqrt(${dot("embedding", "embedding")}) AS nrm FROM embeddings),
+          sqrt(${dotSql("embedding", "embedding")}) AS nrm FROM embeddings),
         cents(cell, cv) AS (VALUES $centRows),
         ranked AS (
           SELECT v.vec_id, v.embedding, v.nrm, c.cell,
             row_number() OVER (PARTITION BY v.vec_id ORDER BY
-              ${dot("v.embedding", "c.cv")} DESC, c.cell) AS crnk
+              ${dotSql("v.embedding", "c.cv")} DESC, c.cell) AS crnk
           FROM n v, cents c),
         assigned AS (SELECT cell, vec_id AS neighbor_id, embedding AS e_c,
                        nrm AS n_c FROM ranked WHERE crnk = 1),
@@ -451,7 +417,7 @@ object Similarity {
         truth AS (SELECT query_id, neighbor_id FROM (
             SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
               row_number() OVER (PARTITION BY q.vec_id ORDER BY
-                ${dot("q.embedding", "c.embedding")} / (q.nrm * c.nrm) DESC,
+                ${dotSql("q.embedding", "c.embedding")} / (q.nrm * c.nrm) DESC,
                 c.vec_id) AS rnk
             FROM n q JOIN n c ON c.vec_id <> q.vec_id
             WHERE q.vec_id < $nQueries)
@@ -489,9 +455,6 @@ object Similarity {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     TransientCaches.register(truth)
     val maxF = factors.max
-    val queries = v.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"), col("embedding").as("e_q"),
-        col("nrm").as("n_q"))
     // one ADC ranking at the largest factor; srnk = ADC rank, so a
     // smaller factor's shortlist is srnk <= f*k
     val shortMax = rankTopKFull(
@@ -499,14 +462,8 @@ object Similarity {
         .withColumnRenamed("score", "cos"), maxF * k)
       .select(col("query_id"), col("neighbor_id"), col("rnk").as("srnk"))
     // exact cosines of the max shortlist, computed once
-    val rer = shortMax
-      .join(v.select(col("vec_id").as("neighbor_id"),
-        col("embedding").as("e_c"), col("nrm").as("n_c")),
-        Seq("neighbor_id"))
-      .join(broadcast(queries), Seq("query_id"))
-      .select(col("query_id"), col("neighbor_id"), col("srnk"),
-        cosineWithNorms(dot(col("e_q"), col("e_c")), col("n_q"),
-          col("n_c")).as("cos"))
+    val rer = exactScored(shortMax, candVecs(v),
+        queryVecs(v.filter(col("vec_id") < nQueries)))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     TransientCaches.register(rer)
     // eager: the concurrent factor branches below scan both caches
@@ -535,17 +492,10 @@ object Similarity {
     * truth. */
   def pqShortlistSweepOracle(nQueries: Int = 10, k: Int = 5,
                              factors: Seq[Int] = Seq(1, 2, 4, 8)): String = {
-    val spark = SparkSession.getActiveSession.getOrElse(
-      graft.Tables.configure(SparkSession.builder().master("local[2]")
-        .config("spark.ui.enabled", "false")).getOrCreate())
-    val sfDir = sys.props.getOrElse("graft.oracle.sfdir",
-      "/root/testdata/sf0.01")
+    val (spark, sfDir) = Tables.oracleSession()
     val cbs = withTrainCache(vectors(spark, sfDir))(trainPqCodebooks(_))
     val nSub = cbs.length
     val sub = cbs.head.head.length
-    val dot = (a: String, b: String) =>
-      s"""list_reduce(list_transform(list_zip($a, $b),
-          x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)), (p, q) -> p + q)"""
     val cbRows = (for {
       m <- 0 until nSub
       kk <- cbs(m).indices
@@ -557,7 +507,7 @@ object Similarity {
     val adc = (0 until nSub).map { m =>
       val lo = m * sub + 1
       val hi = (m + 1) * sub
-      s"${dot(s"q.embedding[$lo:$hi]", s"cbl.cb[${m + 1}][n.c$m + 1]")}"
+      s"${dotSql(s"q.embedding[$lo:$hi]", s"cbl.cb[${m + 1}][n.c$m + 1]")}"
     }.mkString(" + ")
     val cbLit = cbs.map(_.map(_.mkString("[", ", ", "]"))
       .mkString("[", ", ", "]")).mkString("[", ", ", "]")
@@ -569,7 +519,7 @@ object Similarity {
            (SELECT CAST(count(*) AS BIGINT)
             FROM (SELECT s.query_id, s.neighbor_id,
                     row_number() OVER (PARTITION BY s.query_id ORDER BY
-                      ${dot("qv.embedding", "cv.embedding")}
+                      ${dotSql("qv.embedding", "cv.embedding")}
                         / (qv.nrm * cv.nrm) DESC, s.neighbor_id) AS rnk
                   FROM (SELECT query_id, neighbor_id FROM adcr
                         WHERE r <= ${f * k}) s
@@ -588,13 +538,13 @@ object Similarity {
         coded AS (SELECT vec_id, m, kk FROM (
                     SELECT sub.vec_id, sub.m, cb.kk,
                       row_number() OVER (PARTITION BY sub.vec_id, sub.m
-                        ORDER BY (${dot("sub.s", "cb.cv")} + cb.bias) DESC,
+                        ORDER BY (${dotSql("sub.s", "cb.cv")} + cb.bias) DESC,
                           cb.kk) AS r
                     FROM sub JOIN cb ON cb.m = sub.m)
                   WHERE r = 1),
         codes AS (SELECT vec_id, $codePivot FROM coded GROUP BY 1),
         nv AS (SELECT vec_id, embedding,
-                 sqrt(${dot("embedding", "embedding")}) AS nrm
+                 sqrt(${dotSql("embedding", "embedding")}) AS nrm
                FROM embeddings),
         adcr AS (SELECT query_id, neighbor_id, r FROM (
             SELECT q.vec_id AS query_id, n.vec_id AS neighbor_id,
@@ -606,7 +556,7 @@ object Similarity {
         truth AS (SELECT query_id, neighbor_id FROM (
             SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
               row_number() OVER (PARTITION BY q.vec_id ORDER BY
-                ${dot("q.embedding", "c.embedding")} / (q.nrm * c.nrm) DESC,
+                ${dotSql("q.embedding", "c.embedding")} / (q.nrm * c.nrm) DESC,
                 c.vec_id) AS rnk
             FROM nv q JOIN nv c ON c.vec_id <> q.vec_id
             WHERE q.vec_id < $nQueries)
@@ -637,59 +587,22 @@ object Similarity {
                                factors: Seq[Int] = Seq(1, 2, 4, 8))
       : DataFrame = {
     val v = vectors(spark, sfDir)
-    val (cents, cbs) = withTrainCache(v) { vc =>
-      val cents = trainCentroids(vc, 16)
-      (cents, trainPqCodebooks(
-        residualAssigned(vc, cents).select(col("vec_id"),
-          col("res").as("embedding"))))
-    }
+    val (cents, cbs) = residualModels(v, 16)
     val truth = annBruteforce(spark, sfDir, nQueries, k)
       .select(col("query_id"), col("neighbor_id"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     TransientCaches.register(truth)
-    val nSub = cbs.length
-    val sub = cbs.head.head.length
-    val maxF = factors.max
-    val centArr = typedLit(cents.map(_.toSeq).toSeq)
-    val codeCols = (0 until nSub).map { m =>
-      element_at(graft.functions.VectorQuantize.nearestCellsBiased(
-        expr(s"slice(res, ${m * sub + 1}, $sub)"), cbs(m),
-        l2Biases(cbs(m)), 1), 1)
-        .as(s"c$m")
-    }
+    val qs = v.filter(col("vec_id") < nQueries)
     val coded = residualAssigned(v, cents)
-      .select(col("cell") +: col("vec_id").as("neighbor_id") +: codeCols: _*)
-    val queries = v.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"), col("embedding").as("e_q"),
-        col("nrm").as("n_q"))
-    val probes = v.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"), col("embedding").as("e_q"),
-        explode(graft.functions.VectorQuantize.nearestCells(
-          col("embedding"), cents, nProbe)).as("cell"))
-    val score = (graft.functions.VectorFunctions.dot(
-      col("e_q"), element_at(centArr, col("cell") + 1)) +:
-      (0 until nSub).map { m =>
-        graft.functions.VectorFunctions.dot(
-          expr(s"slice(e_q, ${m * sub + 1}, $sub)"),
-          element_at(typedLit(cbs(m).map(_.toSeq).toSeq), col(s"c$m") + 1))
-      }).reduceLeft(_ + _)
+      .select(col("cell") +: col("vec_id").as("neighbor_id") +:
+        pqCodeCols(cbs, "res"): _*)
     // one residual-ADC ranking over the probed-cell candidates at the
     // LARGEST factor; srnk = ADC rank, smaller factors are prefixes
-    val shortMax = rankTopKFull(
-      coded.join(broadcast(probes.select("cell", "query_id", "e_q")),
-          Seq("cell"))
-        .filter(col("query_id") =!= col("neighbor_id"))
-        .select(col("query_id"), col("neighbor_id"), score.as("cos")),
-      maxF * k)
+    val shortMax = rankTopKFull(candidates(coded,
+        probeFrame(qs, cents, nProbe).select("cell", "query_id", "e_q"),
+        adcScore(cbs, "e_q", Some(cents))), factors.max * k)
       .select(col("query_id"), col("neighbor_id"), col("rnk").as("srnk"))
-    val rer = shortMax
-      .join(v.select(col("vec_id").as("neighbor_id"),
-        col("embedding").as("e_c"), col("nrm").as("n_c")),
-        Seq("neighbor_id"))
-      .join(broadcast(queries), Seq("query_id"))
-      .select(col("query_id"), col("neighbor_id"), col("srnk"),
-        cosineWithNorms(dot(col("e_q"), col("e_c")), col("n_q"),
-          col("n_c")).as("cos"))
+    val rer = exactScored(shortMax, candVecs(v), queryVecs(qs))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     TransientCaches.register(rer)
     // eager: the concurrent factor branches below scan both caches
@@ -721,23 +634,11 @@ object Similarity {
                                      nProbe: Int = 4,
                                      factors: Seq[Int] = Seq(1, 2, 4, 8))
       : String = {
-    val spark = SparkSession.getActiveSession.getOrElse(
-      graft.Tables.configure(SparkSession.builder().master("local[2]")
-        .config("spark.ui.enabled", "false")).getOrCreate())
-    val sfDir = sys.props.getOrElse("graft.oracle.sfdir",
-      "/root/testdata/sf0.01")
+    val (spark, sfDir) = Tables.oracleSession()
     val v = vectors(spark, sfDir)
-    val (cents, cbs) = withTrainCache(v) { vc =>
-      val cents = trainCentroids(vc, 16)
-      (cents, trainPqCodebooks(
-        residualAssigned(vc, cents).select(col("vec_id"),
-          col("res").as("embedding"))))
-    }
+    val (cents, cbs) = residualModels(v, 16)
     val nSub = cbs.length
     val sub = cbs.head.head.length
-    val dot = (a: String, b: String) =>
-      s"""list_reduce(list_transform(list_zip($a, $b),
-          x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)), (p, q) -> p + q)"""
     val centRows = cents.zipWithIndex.map { case (c, i) =>
       s"(${i}, ${c.mkString("[", ", ", "]")})"
     }.mkString(", ")
@@ -749,10 +650,10 @@ object Similarity {
       .mkString(", ")
     val codePivot = (0 until nSub)
       .map(m => s"max(CASE WHEN m = $m THEN kk END) AS c$m").mkString(", ")
-    val adc = (s"${dot("p.e_q", "ct.cv")}" +: (0 until nSub).map { m =>
+    val adc = (s"${dotSql("p.e_q", "ct.cv")}" +: (0 until nSub).map { m =>
       val lo = m * sub + 1
       val hi = (m + 1) * sub
-      s"${dot(s"p.e_q[$lo:$hi]", s"cbl.cb[${m + 1}][n.c$m + 1]")}"
+      s"${dotSql(s"p.e_q[$lo:$hi]", s"cbl.cb[${m + 1}][n.c$m + 1]")}"
     }).mkString(" + ")
     val cbLit = cbs.map(_.map(_.mkString("[", ", ", "]"))
       .mkString("[", ", ", "]")).mkString("[", ", ", "]")
@@ -764,7 +665,7 @@ object Similarity {
            (SELECT CAST(count(*) AS BIGINT)
             FROM (SELECT s.query_id, s.neighbor_id,
                     row_number() OVER (PARTITION BY s.query_id ORDER BY
-                      ${dot("qv.embedding", "cv.embedding")}
+                      ${dotSql("qv.embedding", "cv.embedding")}
                         / (qv.nrm * cv.nrm) DESC, s.neighbor_id) AS rnk
                   FROM (SELECT query_id, neighbor_id FROM adcr
                         WHERE r <= ${f * k}) s
@@ -778,12 +679,12 @@ object Similarity {
         cb(m, kk, cv, bias) AS (VALUES $cbRows),
         cbl AS (SELECT $cbLit AS cb),
         nv AS (SELECT vec_id, embedding,
-                 sqrt(${dot("embedding", "embedding")}) AS nrm
+                 sqrt(${dotSql("embedding", "embedding")}) AS nrm
                FROM embeddings),
         ranked AS (
           SELECT v.vec_id, v.embedding, v.nrm, c.cell,
             row_number() OVER (PARTITION BY v.vec_id ORDER BY
-              ${dot("v.embedding", "c.cv")} DESC, c.cell) AS crnk
+              ${dotSql("v.embedding", "c.cv")} DESC, c.cell) AS crnk
           FROM nv v, cents c),
         resid AS (SELECT r.vec_id, r.cell,
             list_transform(list_zip(r.embedding, c.cv),
@@ -797,7 +698,7 @@ object Similarity {
         coded AS (SELECT vec_id, m, kk FROM (
                     SELECT sub.vec_id, sub.m, cb.kk,
                       row_number() OVER (PARTITION BY sub.vec_id, sub.m
-                        ORDER BY (${dot("sub.s", "cb.cv")} + cb.bias) DESC,
+                        ORDER BY (${dotSql("sub.s", "cb.cv")} + cb.bias) DESC,
                           cb.kk) AS r
                     FROM sub JOIN cb ON cb.m = sub.m)
                   WHERE r = 1),
@@ -818,7 +719,7 @@ object Similarity {
         truth AS (SELECT query_id, neighbor_id FROM (
             SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
               row_number() OVER (PARTITION BY q.vec_id ORDER BY
-                ${dot("q.embedding", "c.embedding")} / (q.nrm * c.nrm) DESC,
+                ${dotSql("q.embedding", "c.embedding")} / (q.nrm * c.nrm) DESC,
                 c.vec_id) AS rnk
             FROM nv q JOIN nv c ON c.vec_id <> q.vec_id
             WHERE q.vec_id < $nQueries)
@@ -895,19 +796,12 @@ object Similarity {
     * hit count, all the proven replay machinery. */
   def pqBitsSweepOracle(sizes: Seq[Int] = Seq(4, 16, 64),
                         nQueries: Int = 10, k: Int = 5): String = {
-    val spark = SparkSession.getActiveSession.getOrElse(
-      graft.Tables.configure(SparkSession.builder().master("local[2]")
-        .config("spark.ui.enabled", "false")).getOrCreate())
-    val sfDir = sys.props.getOrElse("graft.oracle.sfdir",
-      "/root/testdata/sf0.01")
+    val (spark, sfDir) = Tables.oracleSession()
     val v = vectors(spark, sfDir)
     val models = withTrainCache(v)(vc =>
       sizes.map(kk => kk -> trainPqCodebooks(vc, k = kk)))
     val nSub = models.head._2.length
     val sub = models.head._2.head.head.length
-    val dot = (a: String, b: String) =>
-      s"""list_reduce(list_transform(list_zip($a, $b),
-          x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)), (p, q) -> p + q)"""
     val codePivot = (0 until nSub)
       .map(m => s"max(CASE WHEN m = $m THEN kk END) AS c$m").mkString(", ")
     val perSize = models.map { case (sz, cbs) =>
@@ -922,14 +816,14 @@ object Similarity {
       val adc = (0 until nSub).map { m =>
         val lo = m * sub + 1
         val hi = (m + 1) * sub
-        s"${dot(s"q.embedding[$lo:$hi]", s"k${sz}_cbl.cb[${m + 1}][n.c$m + 1]")}"
+        s"${dotSql(s"q.embedding[$lo:$hi]", s"k${sz}_cbl.cb[${m + 1}][n.c$m + 1]")}"
       }.mkString(" + ")
       s"""k${sz}_cb(m, kk, cv, bias) AS (VALUES $cbRows),
          k${sz}_cbl AS (SELECT $cbLit AS cb),
          k${sz}_coded AS (SELECT vec_id, m, kk, s, cv, bias FROM (
              SELECT sub.vec_id, sub.m, cb.kk, sub.s, cb.cv, cb.bias,
                row_number() OVER (PARTITION BY sub.vec_id, sub.m
-                 ORDER BY (${dot("sub.s", "cb.cv")} + cb.bias) DESC,
+                 ORDER BY (${dotSql("sub.s", "cb.cv")} + cb.bias) DESC,
                    cb.kk) AS r
              FROM sub JOIN k${sz}_cb cb ON cb.m = sub.m) WHERE r = 1),
          k${sz}_codes AS (SELECT vec_id, $codePivot
@@ -946,14 +840,14 @@ object Similarity {
       val bits = 32 - Integer.numberOfLeadingZeros(sz - 1)
       s"""SELECT $sz AS codebook_k, $bits AS bits_per_code,
            ${cbs.length * bits} AS bits_per_vector,
-           (SELECT round(CAST(sum(CAST(round(${dot("s", "s")}
-              - 2 * ${dot("s", "cv")} - 2 * bias, 8) AS DECIMAL(18,8)))
+           (SELECT round(CAST(sum(CAST(round(${dotSql("s", "s")}
+              - 2 * ${dotSql("s", "cv")} - 2 * bias, 8) AS DECIMAL(18,8)))
               AS DOUBLE) / count(*), 6) FROM k${sz}_coded) AS mean_mse6,
            (SELECT CAST(count(*) AS BIGINT) FROM truth) AS n_truth,
            (SELECT CAST(count(*) AS BIGINT)
             FROM (SELECT s.query_id, s.neighbor_id,
                     row_number() OVER (PARTITION BY s.query_id ORDER BY
-                      ${dot("qv.embedding", "cv.embedding")}
+                      ${dotSql("qv.embedding", "cv.embedding")}
                         / (qv.nrm * cv.nrm) DESC, s.neighbor_id) AS rnk
                   FROM k${sz}_short s
                   JOIN nv qv ON qv.vec_id = s.query_id
@@ -967,12 +861,12 @@ object Similarity {
                 FROM embeddings,
                      (SELECT unnest(range(0, $nSub)) AS m) mm),
         nv AS (SELECT vec_id, embedding,
-                 sqrt(${dot("embedding", "embedding")}) AS nrm
+                 sqrt(${dotSql("embedding", "embedding")}) AS nrm
                FROM embeddings),
         truth AS (SELECT query_id, neighbor_id FROM (
             SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
               row_number() OVER (PARTITION BY q.vec_id ORDER BY
-                ${dot("q.embedding", "c.embedding")} / (q.nrm * c.nrm) DESC,
+                ${dotSql("q.embedding", "c.embedding")} / (q.nrm * c.nrm) DESC,
                 c.vec_id) AS rnk
             FROM nv q JOIN nv c ON c.vec_id <> q.vec_id
             WHERE q.vec_id < $nQueries)
@@ -1057,11 +951,7 @@ object Similarity {
     * [[ivfPqTrainedOracle]] machinery merged onto SHARED CTEs (one code
     * pivot, one truth) with one counting branch per variant. */
   def annRecallEvalPqOracle(nQueries: Int = 10, k: Int = 5): String = {
-    val spark = SparkSession.getActiveSession.getOrElse(
-      graft.Tables.configure(SparkSession.builder().master("local[2]")
-        .config("spark.ui.enabled", "false")).getOrCreate())
-    val sfDir = sys.props.getOrElse("graft.oracle.sfdir",
-      "/root/testdata/sf0.01")
+    val (spark, sfDir) = Tables.oracleSession()
     val v = vectors(spark, sfDir)
     val (cents, cbs, cbsR, rO, cbsO) = withTrainCache(v) { vc =>
       val cents = trainCentroids(vc, 16)
@@ -1074,9 +964,6 @@ object Similarity {
     val nSub = cbs.length
     val sub = cbs.head.head.length
     val nProbe = 4
-    val dotE = (a: String, b: String) =>
-      s"""list_reduce(list_transform(list_zip($a, $b),
-          x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)), (p, q) -> p + q)"""
     val centRows = cents.zipWithIndex.map { case (c, i) =>
       s"(${i}, ${c.mkString("[", ", ", "]")})"
     }.mkString(", ")
@@ -1088,33 +975,33 @@ object Similarity {
     def adc(qE: String) = (0 until nSub).map { m =>
       val lo = m * sub + 1
       val hi = (m + 1) * sub
-      s"${dotE(s"$qE[$lo:$hi]", s"cbl.cb[${m + 1}][n.c$m + 1]")}"
+      s"${dotSql(s"$qE[$lo:$hi]", s"cbl.cb[${m + 1}][n.c$m + 1]")}"
     }.mkString(" + ")
     // OPQ ADC: the rotated query's slices off the OPQ codebooks
     val adcO = (0 until nSub).map { m =>
       val lo = m * sub + 1
       val hi = (m + 1) * sub
-      s"${dotE(s"q.embedding[$lo:$hi]", s"cbol.cb[${m + 1}][n.c$m + 1]")}"
+      s"${dotSql(s"q.embedding[$lo:$hi]", s"cbol.cb[${m + 1}][n.c$m + 1]")}"
     }.mkString(" + ")
     // IVF×OPQ ADC: same rotated-query slices, probed cells only
     val adcIO = (0 until nSub).map { m =>
       val lo = m * sub + 1
       val hi = (m + 1) * sub
-      s"${dotE(s"p.e_s[$lo:$hi]", s"cbol.cb[${m + 1}][n.c$m + 1]")}"
+      s"${dotSql(s"p.e_s[$lo:$hi]", s"cbol.cb[${m + 1}][n.c$m + 1]")}"
     }.mkString(" + ")
     // residual ADC: centroid term FIRST (the engine's reduceLeft order),
     // then the per-sub-space codeword dots off the RESIDUAL codebooks
-    val adcR = (s"${dotE("p.e_q", "ct.cv")}" +: (0 until nSub).map { m =>
+    val adcR = (s"${dotSql("p.e_q", "ct.cv")}" +: (0 until nSub).map { m =>
       val lo = m * sub + 1
       val hi = (m + 1) * sub
-      s"${dotE(s"p.e_q[$lo:$hi]", s"cbrl.cb[${m + 1}][n.c$m + 1]")}"
+      s"${dotSql(s"p.e_q[$lo:$hi]", s"cbrl.cb[${m + 1}][n.c$m + 1]")}"
     }).mkString(" + ")
     // one branch per variant: shortlist CTE name in, hit count out
     def hitCount(shortCte: String) =
       s"""(SELECT CAST(count(*) AS BIGINT)
             FROM (SELECT s.query_id, s.neighbor_id,
                     row_number() OVER (PARTITION BY s.query_id ORDER BY
-                      ${dotE("qv.embedding", "cv.embedding")}
+                      ${dotSql("qv.embedding", "cv.embedding")}
                         / (qv.nrm * cv.nrm) DESC, s.neighbor_id) AS rnk
                   FROM $shortCte s
                   JOIN nv qv ON qv.vec_id = s.query_id
@@ -1136,14 +1023,14 @@ object Similarity {
         codedo AS (SELECT vec_id, m, kk FROM (
                      SELECT subo.vec_id, subo.m, cbo.kk,
                        row_number() OVER (PARTITION BY subo.vec_id, subo.m
-                         ORDER BY (${dotE("subo.s", "cbo.cv")} + cbo.bias)
+                         ORDER BY (${dotSql("subo.s", "cbo.cv")} + cbo.bias)
                            DESC, cbo.kk) AS r
                      FROM subo JOIN cbo ON cbo.m = subo.m)
                    WHERE r = 1),
         codeso AS (SELECT vec_id, $codePivot FROM codedo GROUP BY 1),
         cents(cell, cv) AS (VALUES $centRows),
         nv AS (SELECT vec_id, embedding,
-                 sqrt(${dotE("embedding", "embedding")}) AS nrm
+                 sqrt(${dotSql("embedding", "embedding")}) AS nrm
                FROM embeddings),
         sub AS (SELECT vec_id, mm.m AS m,
                   embedding[mm.m * $sub + 1 : (mm.m + 1) * $sub] AS s
@@ -1152,7 +1039,7 @@ object Similarity {
         coded AS (SELECT vec_id, m, kk FROM (
                     SELECT sub.vec_id, sub.m, cb.kk,
                       row_number() OVER (PARTITION BY sub.vec_id, sub.m
-                        ORDER BY (${dotE("sub.s", "cb.cv")} + cb.bias) DESC,
+                        ORDER BY (${dotSql("sub.s", "cb.cv")} + cb.bias) DESC,
                           cb.kk) AS r
                     FROM sub JOIN cb ON cb.m = sub.m)
                   WHERE r = 1),
@@ -1160,7 +1047,7 @@ object Similarity {
         ranked AS (
           SELECT v.vec_id, v.embedding, v.nrm, c.cell,
             row_number() OVER (PARTITION BY v.vec_id ORDER BY
-              ${dotE("v.embedding", "c.cv")} DESC, c.cell) AS crnk
+              ${dotSql("v.embedding", "c.cv")} DESC, c.cell) AS crnk
           FROM nv v, cents c),
         acodes AS (SELECT a.cell, c.* FROM codes c
                    JOIN (SELECT vec_id, cell FROM ranked WHERE crnk = 1) a
@@ -1177,7 +1064,7 @@ object Similarity {
         codedr AS (SELECT vec_id, m, kk FROM (
                      SELECT subr.vec_id, subr.m, cbr.kk,
                        row_number() OVER (PARTITION BY subr.vec_id, subr.m
-                         ORDER BY (${dotE("subr.s", "cbr.cv")} + cbr.bias)
+                         ORDER BY (${dotSql("subr.s", "cbr.cv")} + cbr.bias)
                            DESC, cbr.kk) AS r
                      FROM subr JOIN cbr ON cbr.m = subr.m)
                    WHERE r = 1),
@@ -1195,7 +1082,7 @@ object Similarity {
         truth AS (SELECT query_id, neighbor_id FROM (
             SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
               row_number() OVER (PARTITION BY q.vec_id ORDER BY
-                ${dotE("q.embedding", "c.embedding")} / (q.nrm * c.nrm) DESC,
+                ${dotSql("q.embedding", "c.embedding")} / (q.nrm * c.nrm) DESC,
                 c.vec_id) AS rnk
             FROM nv q JOIN nv c ON c.vec_id <> q.vec_id
             WHERE q.vec_id < $nQueries)
@@ -1240,9 +1127,9 @@ object Similarity {
         short_sq8 AS (SELECT query_id, neighbor_id FROM (
             SELECT q.vec_id AS query_id, n.vec_id AS neighbor_id,
               row_number() OVER (PARTITION BY q.vec_id ORDER BY
-                (${dotE("q.embedding", "n.d")}
-                   / (sqrt(${dotE("q.embedding", "q.embedding")})
-                      * sqrt(${dotE("n.d", "n.d")}))) DESC,
+                (${dotSql("q.embedding", "n.d")}
+                   / (sqrt(${dotSql("q.embedding", "q.embedding")})
+                      * sqrt(${dotSql("n.d", "n.d")}))) DESC,
                 n.vec_id) AS r
             FROM embeddings q JOIN dqz n ON n.vec_id <> q.vec_id
             WHERE q.vec_id < $nQueries)
@@ -1313,14 +1200,8 @@ object Similarity {
     val cents = staticCentroids()
     val v = vecs.select(col("vec_id"), col("embedding"),
       l2norm(col("embedding")).as("nrm"))
-    def cellsOf(n: Int) =
-      graft.functions.VectorQuantize.nearestCells(col("embedding"), cents, n)
-    val assigned = v.select(element_at(cellsOf(1), 1).as("cell"),
-      col("vec_id").as("neighbor_id"), col("embedding").as("e_c"),
-      col("nrm").as("n_c"))
-    val probes = v.select(col("vec_id").as("query_id"),
-      col("embedding").as("e_q"), col("nrm").as("n_q"),
-      explode(cellsOf(cents.length)).as("cell"))
+    val assigned = ivfLists(v, cents)
+    val probes = probeFrame(v, cents, cents.length)
     // salted exactly like [[knnGraphAnn]]: the nCells-key join caps the
     // pair-compute stage at nCells tasks; sub-bucketing the candidate
     // side spreads the identical pair set over the session's cores
@@ -1339,8 +1220,7 @@ object Similarity {
           Seq("cell", "salt"))
         .filter(col("query_id") =!= col("neighbor_id"))
         .select(col("query_id"), col("neighbor_id"),
-          cosineWithNorms(dot(col("e_q"), col("e_c")), col("n_q"),
-            col("n_c")).as("cos")), k)
+          exactCos.as("cos")), k)
   }
 
   /** EXACT INCREMENTAL kNN edge maintenance: the combined graph over
@@ -1425,22 +1305,13 @@ object Similarity {
         col("embedding").as("e_q"), col("nrm").as("n_q"))
       .join(broadcast(dCand), col("query_id") =!= col("neighbor_id"))
       .select(col("query_id"), col("neighbor_id"),
-        cosineWithNorms(dot(col("e_q"), col("e_c")), col("n_q"),
-          col("n_c")).as("cos"))
+        exactCos.as("cos"))
     val stored = baseEdges.select(col("src").as("query_id"),
       col("dst").as("neighbor_id"), col("cos"))
     val mergedBase = rankTopKFull(stored.unionByName(newCand), k)
     // delta nodes: broadcast query side, the corpus streams
     val deltaEdges = rankTopKFull(
-      bn.unionByName(dn)
-        .select(col("vec_id").as("neighbor_id"),
-          col("embedding").as("e_c"), col("nrm").as("n_c"))
-        .join(broadcast(dn.select(col("vec_id").as("query_id"),
-          col("embedding").as("e_q"), col("nrm").as("n_q"))),
-          col("query_id") =!= col("neighbor_id"))
-        .select(col("query_id"), col("neighbor_id"),
-          cosineWithNorms(dot(col("e_q"), col("e_c")), col("n_q"),
-            col("n_c")).as("cos")), k)
+      candidates(candVecs(bn.unionByName(dn)), queryVecs(dn), exactCos), k)
     mergedBase.unionByName(deltaEdges)
   }
 
@@ -1523,15 +1394,12 @@ object Similarity {
     * filter + the same oriented triangle join and per-corner
     * attribution. */
   def knnTrianglesOracle(k: Int = 5): String = {
-    val dot = (a: String, b: String) =>
-      s"""list_reduce(list_transform(list_zip($a, $b),
-          x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)), (p, q) -> p + q)"""
     s"""WITH n AS (SELECT vec_id, embedding,
-          sqrt(${dot("embedding", "embedding")}) AS nrm FROM embeddings),
+          sqrt(${dotSql("embedding", "embedding")}) AS nrm FROM embeddings),
         e0 AS (SELECT query_id, neighbor_id FROM (
             SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
               row_number() OVER (PARTITION BY q.vec_id ORDER BY
-                ${dot("q.embedding", "c.embedding")} / (q.nrm * c.nrm) DESC,
+                ${dotSql("q.embedding", "c.embedding")} / (q.nrm * c.nrm) DESC,
                 c.vec_id) AS rnk
             FROM n q JOIN n c ON c.vec_id <> q.vec_id)
           WHERE rnk <= $k),
@@ -1606,15 +1474,12 @@ object Similarity {
     * mutual filter + recursive-CTE transitive closure + the identical
     * majority/purity arithmetic. */
   def knnCommunitiesOracle(k: Int = 5): String = {
-    val dot = (a: String, b: String) =>
-      s"""list_reduce(list_transform(list_zip($a, $b),
-          x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)), (p, q) -> p + q)"""
     s"""WITH RECURSIVE n AS (SELECT vec_id, embedding,
-          sqrt(${dot("embedding", "embedding")}) AS nrm FROM embeddings),
+          sqrt(${dotSql("embedding", "embedding")}) AS nrm FROM embeddings),
         e0 AS (SELECT query_id, neighbor_id FROM (
             SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
               row_number() OVER (PARTITION BY q.vec_id ORDER BY
-                ${dot("q.embedding", "c.embedding")} / (q.nrm * c.nrm) DESC,
+                ${dotSql("q.embedding", "c.embedding")} / (q.nrm * c.nrm) DESC,
                 c.vec_id) AS rnk
             FROM n q JOIN n c ON c.vec_id <> q.vec_id)
           WHERE rnk <= $k),
@@ -1671,6 +1536,205 @@ object Similarity {
         round(col("cos"), 6).as("cos6"))
       .orderBy("query_id", "rnk")
 
+  // ---- The two-stage ANN scan core ----
+  // Every IVF / SQ8 / PQ / MMR serving variant is a composition of the
+  // stages below — the FAISS index-factory split into transform, coarse
+  // quantizer, scan code and selector: a probe frame, a candidate join
+  // carrying one score column, a bounded TopK shortlist, and an exact
+  // re-rank by true cosine. A variant picks its lists (raw, sq8, PQ
+  // codes), its score (exact, sq8, ADC) and its selector (top-k or MMR).
+
+  /** Exact cosine of the query (e_q, n_q) against the candidate
+    * (e_c, n_c). */
+  private def exactCos: Column =
+    cosineWithNorms(dot(col("e_q"), col("e_c")), col("n_q"), col("n_c"))
+
+  /** Candidate vectors (neighbor_id, e_c, n_c) of a (vec_id, embedding,
+    * nrm) frame. */
+  private def candVecs(v: DataFrame): DataFrame =
+    v.select(col("vec_id").as("neighbor_id"), col("embedding").as("e_c"),
+      col("nrm").as("n_c"))
+
+  /** Query vectors (query_id, e_q, n_q) of a (vec_id, embedding, nrm)
+    * frame. */
+  private def queryVecs(q: DataFrame): DataFrame =
+    q.select(col("vec_id").as("query_id"), col("embedding").as("e_q"),
+      col("nrm").as("n_q"))
+
+  /** The coarse cell of each row's `embedding` — map-only, one argmax
+    * over the broadcast centroid matrix. */
+  private def cellOf(cents: Array[Array[Double]]): Column =
+    element_at(graft.functions.VectorQuantize.nearestCells(col("embedding"),
+      cents, 1), 1).as("cell")
+
+  /** Inline inverted lists (cell, neighbor_id, e_c, n_c) of a (vec_id,
+    * embedding, nrm) corpus — the row shape an artifact's
+    * [[indexLists]] reads back. */
+  private def ivfLists(v: DataFrame, cents: Array[Array[Double]]): DataFrame =
+    v.select(cellOf(cents), col("vec_id").as("neighbor_id"),
+      col("embedding").as("e_c"), col("nrm").as("n_c"))
+
+  /** An index artifact's centroids and inverted lists (cell,
+    * neighbor_id, e_c, n_c), base plus live deltas. `raw` first refuses
+    * a whitened artifact ([[requireRawIndex]]); only the whitened serve,
+    * whose queries arrive already transformed, reads with `raw = false`. */
+  private def indexLists(spark: SparkSession, dir: String,
+                         raw: Boolean = true)
+      : (Array[Array[Double]], DataFrame) = {
+    if (raw) requireRawIndex(spark, dir)
+    (readIvfCentroids(spark, dir), readIvfAssigned(spark, dir)
+      .select(col("cell"), col("vec_id").as("neighbor_id"),
+        col("embedding").as("e_c"), col("nrm").as("n_c")))
+  }
+
+  /** Probe frame (query_id, e_q, n_q, cell): each (vec_id, embedding)
+    * query fanned out to its `nProbe` nearest cells. `norm` is the query
+    * norm — a precomputed `nrm`, or computed inline for raw query
+    * frames. */
+  private def probeFrame(queries: DataFrame, cents: Array[Array[Double]],
+                         nProbe: Int, norm: Column = col("nrm")): DataFrame =
+    queries.select(col("vec_id").as("query_id"), col("embedding").as("e_q"),
+      norm.as("n_q"), explode(graft.functions.VectorQuantize
+        .nearestCells(col("embedding"), cents, nProbe)).as("cell"))
+
+  /** Candidate join → (query_id, neighbor_id, `as`). Probes carrying a
+    * `cell` column equi-join the lists on it (IVF: only probed cells are
+    * scanned; each neighbor lives in one cell and a query's probed cells
+    * are distinct, so pairs are unique); probes without one are a flat
+    * scan of every candidate against the broadcast queries. Self-matches
+    * are dropped either way. */
+  private def candidates(lists: DataFrame, probes: DataFrame, score: Column,
+                         as: String = "cos"): DataFrame = {
+    val notSelf = col("query_id") =!= col("neighbor_id")
+    val pairs =
+      if (probes.columns.contains("cell"))
+        lists.join(broadcast(probes), Seq("cell")).filter(notSelf)
+      else lists.join(broadcast(probes), notSelf)
+    pairs.select(col("query_id"), col("neighbor_id"), score.as(as))
+  }
+
+  /** Bounded shortlist: the top-`n` (query_id, neighbor_id) per query by
+    * `score` — the [[graft.functions.TopKByScore]] aggregate, so the
+    * exchange carries at most `n` rows per (query, partition). */
+  private def shortlistOf(scored: DataFrame, n: Int): DataFrame =
+    scored
+      .groupBy("query_id")
+      .agg(graft.functions.TopKByScoreAgg.topkByScore(
+        col("neighbor_id"), col("score"), n).as("top"))
+      .select(col("query_id"), explode(col("top.neighbor_id"))
+        .as("neighbor_id"))
+
+  /** SQ8 stage 1: candidates scored against their dequantized int8
+    * serving vector ([[graft.functions.Sq8Dequant]], built once per
+    * candidate, map-only — re-quantizing inside the pair join would
+    * multiply the work by the query count), cut to a top-`n` shortlist. */
+  private def sq8Shortlist(lists: DataFrame, probes: DataFrame,
+                           n: Int): DataFrame = {
+    val scan = lists
+      .select(lists.columns.filter(Set("cell", "neighbor_id")).map(col) :+
+        graft.functions.Sq8Dequant.dequant(col("e_c")).as("d"): _*)
+      .withColumn("n_d", l2norm(col("d")))
+    shortlistOf(candidates(scan, probes,
+      cosineWithNorms(dot(col("e_q"), col("d")), col("n_q"), col("n_d")),
+      "score"), n)
+  }
+
+  /** Exact stage: gather only the shortlisted vectors by id (an
+    * equi-join, shortlist × queries rows) and score true cosine in the
+    * candidates' space → `short`'s columns + `cos`. */
+  private def exactScored(short: DataFrame, cands: DataFrame,
+                          queries: DataFrame): DataFrame =
+    short.join(cands.select("neighbor_id", "e_c", "n_c"), Seq("neighbor_id"))
+      .join(broadcast(queries), Seq("query_id"))
+      .select(short.columns.map(col) :+ exactCos.as("cos"): _*)
+
+  /** Exact re-rank: [[exactScored]] ranked to the final top-k. */
+  private def exactRerank(short: DataFrame, cands: DataFrame,
+                          queries: DataFrame, k: Int): DataFrame =
+    rankTopK(exactScored(short, cands, queries), k)
+
+  /** PQ code columns c0..c{m-1} of the `src` vector column: one
+    * L2-argmin per sub-space over the broadcast codebook, map-only. */
+  private def pqCodeCols(cbs: Array[Array[Array[Double]]],
+                         src: String): Seq[Column] = {
+    val sub = cbs.head.head.length
+    cbs.indices.map { m =>
+      element_at(graft.functions.VectorQuantize.nearestCellsBiased(
+        expr(s"slice($src, ${m * sub + 1}, $sub)"), cbs(m),
+        l2Biases(cbs(m)), 1), 1).as(s"c$m")
+    }
+  }
+
+  /** ADC score: each sub-space slice of the query column `q` dotted with
+    * the candidate's codeword, summed left to right — the oracles add in
+    * the same order, so the double is bit-identical. Residual codes
+    * (`cents` given) start the sum with the probed cell's centroid term
+    * dot(e_q, c), since recon = c + codewords. */
+  private def adcScore(cbs: Array[Array[Array[Double]]], q: String,
+                       cents: Option[Array[Array[Double]]] = None): Column = {
+    val sub = cbs.head.head.length
+    val centDot = cents.map(c => dot(col("e_q"),
+      element_at(typedLit(c.map(_.toSeq).toSeq), col("cell") + 1)))
+    (centDot.toSeq ++ cbs.indices.map { m =>
+      dot(expr(s"slice($q, ${m * sub + 1}, $sub)"),
+        element_at(typedLit(cbs(m).map(_.toSeq).toSeq), col(s"c$m") + 1))
+    }).reduceLeft(_ + _)
+  }
+
+  /** The inline two-stage tail: a bounded shortlist of the `score`d
+    * pairs, exact-reranked in `v`'s space against its first `nQueries`
+    * vectors. `v` is the ORIGINAL space even when `scored` ranks in a
+    * rotated one (OPQ): rotation preserves cosine, and ranking on the
+    * raw embeddings keeps the output directly comparable. */
+  private def shortlistRerank(scored: DataFrame, v: DataFrame, nQueries: Int,
+                              k: Int, shortlistFactor: Int = 8): DataFrame =
+    exactRerank(shortlistOf(scored, shortlistFactor * k), candVecs(v),
+      queryVecs(v.filter(col("vec_id") < nQueries)), k)
+
+  /** Build a fresh artifact under a per-run scratch dir (concurrent runs
+    * must not overwrite each other's artifact mid-read), then serve the
+    * first `nQueries` corpus vectors from it — the `*Indexed` queries. */
+  private def serveFreshIndex(spark: SparkSession, sfDir: String,
+                              kind: String, nQueries: Int)
+                             (build: String => Unit)
+                             (serve: (String, DataFrame) => DataFrame)
+      : DataFrame = {
+    val dir = ExportImport.scratch(s"$kind/run-${java.util.UUID.randomUUID()}")
+    build(dir)
+    serve(dir, Tables.load(spark, sfDir, "embeddings")
+      .filter(col("vec_id") < nQueries)
+      .select(col("vec_id"), col("embedding")))
+  }
+
+  /** The `build` of the PQ-leg `*Indexed` queries: the IVF artifact over
+    * `v` under `cents`, plus its PQ leg from the given models. */
+  private def ivfPqArtifact(spark: SparkSession, v: DataFrame,
+                            cents: Array[Array[Double]],
+                            cbs: Array[Array[Array[Double]]],
+                            residual: Option[Boolean] = None,
+                            rotation: Option[Array[Array[Double]]] = None)
+                           (dir: String): Unit = {
+    ivfIndexBuild(spark, v.select("vec_id", "embedding"), dir, cents)
+    ivfPqIndexAdd(spark, dir, Some(cbs), residual = residual,
+      rotation = rotation)
+  }
+
+  /** Coarse centroids + raw PQ codebooks, trained on the cached corpus. */
+  private def ivfPqModels(v: DataFrame, nCells: Int)
+      : (Array[Array[Double]], Array[Array[Array[Double]]]) =
+    withTrainCache(v)(vc => (trainCentroids(vc, nCells), trainPqCodebooks(vc)))
+
+  /** Coarse centroids + RESIDUAL PQ codebooks: the codebooks train on
+    * the `e − c(e)` frame ([[trainPqCodebooks]] is dimension- and
+    * type-agnostic, so array<double> residuals train as-is). */
+  private def residualModels(v: DataFrame, nCells: Int)
+      : (Array[Array[Double]], Array[Array[Array[Double]]]) =
+    withTrainCache(v) { vc =>
+      val cents = trainCentroids(vc, nCells)
+      (cents, trainPqCodebooks(residualAssigned(vc, cents)
+        .select(col("vec_id"), col("res").as("embedding"))))
+    }
+
   /** Spherical k-means coarse quantizer, trained as DataFrame
     * aggregations. Each iteration is map-only assignment (the
     * [[graft.functions.NearestCells]] expression folds the centroid
@@ -1720,8 +1784,7 @@ object Similarity {
         .as[Array[Double]].collect())
     for (_ <- 1 to iters) {
       val means = v.select(
-          element_at(graft.functions.VectorQuantize.nearestCells(
-            col("embedding"), cents, 1), 1).as("cell"),
+          cellOf(cents),
           posexplode(col("embedding")).as(Seq("pos", "x")))
         .groupBy("cell", "pos")
         .agg(avg(col("x")).as("m"))
@@ -1851,26 +1914,9 @@ object Similarity {
     * the cell equi-join). */
   private[graft] def ivfServe(corpus: DataFrame, queries: DataFrame,
                               cents: Array[Array[Double]], nProbe: Int,
-                              k: Int): DataFrame = {
-    def cellsOf(n: Int) =
-      graft.functions.VectorQuantize.nearestCells(col("embedding"), cents, n)
-
-    val assigned = corpus.select(
-      element_at(cellsOf(1), 1).as("cell"),
-      col("vec_id").as("neighbor_id"),
-      col("embedding").as("e_c"), col("nrm").as("n_c"))
-    val probes = queries
-      .select(col("vec_id").as("query_id"), col("embedding").as("e_q"),
-        col("nrm").as("n_q"), explode(cellsOf(nProbe)).as("cell"))
-
-    rankTopK(
-      assigned.join(broadcast(probes), Seq("cell"))
-        .filter(col("query_id") =!= col("neighbor_id"))
-        .select(col("query_id"), col("neighbor_id"),
-          cosineWithNorms(dot(col("e_q"), col("e_c")), col("n_q"), col("n_c"))
-            .as("cos")),
-      k)
-  }
+                              k: Int): DataFrame =
+    rankTopK(candidates(ivfLists(corpus, cents),
+      probeFrame(queries, cents, nProbe), exactCos), k)
 
   /** Batch twin for the streaming ANN path: serve an explicit
     * (vec_id, embedding) query frame against the corpus through the
@@ -1955,8 +2001,7 @@ object Similarity {
   private[graft] def assignWithCentroids(vecs: DataFrame,
                                          cents: Array[Array[Double]]): DataFrame =
     vecs.select(
-      element_at(graft.functions.VectorQuantize
-        .nearestCells(col("embedding"), cents, 1), 1).as("cell"),
+      cellOf(cents),
       col("vec_id"), col("embedding"),
       l2norm(col("embedding")).as("nrm"))
 
@@ -2333,22 +2378,15 @@ object Similarity {
     def one(tag: String, delta: DataFrame): DataFrame = {
       val corpus = withNrm(base.unionByName(delta))
       val queries = withNrm(delta.filter(col("vec_id") < nQueries * 5))
-      val qf = queries.select(col("vec_id").as("query_id"),
-        col("embedding").as("e_q"), col("nrm").as("n_q"))
-      val cf = corpus.select(col("vec_id").as("neighbor_id"),
-        col("embedding").as("e_c"), col("nrm").as("n_c"))
       // brute truth over the CURRENT corpus (broadcast query side)
-      val truth = rankTopK(cf.join(broadcast(qf),
-          col("query_id") =!= col("neighbor_id"))
-        .select(col("query_id"), col("neighbor_id"),
-          cosineWithNorms(dot(col("e_q"), col("e_c")), col("n_q"),
-            col("n_c")).as("cos")), k)
+      val truth = rankTopK(candidates(candVecs(corpus), queryVecs(queries),
+          exactCos), k)
         .select("query_id", "neighbor_id")
       val served = ivfServe(corpus, queries, cents, nProbe, k)
         .select("query_id", "neighbor_id")
       // the pruning bill: probed-cell population, no vector join (each
       // query's own vector sits in its probed top cell — subtract)
-      val cellCounts = corpus.select(element_at(cellsOf(1), 1).as("cell"))
+      val cellCounts = corpus.select(cellOf(cents))
         .groupBy("cell").agg(count(lit(1)).as("cnt"))
       val nCand = queries
         .select(col("vec_id").as("query_id"), explode(cellsOf(nProbe)).as("cell"))
@@ -2374,21 +2412,18 @@ object Similarity {
   def ivfDriftImpactOracle(nQueries: Int = 10, k: Int = 5,
                            nProbe: Int = 4): String = {
     val cents = staticCentroids()
-    val dotE = (a: String, b: String) =>
-      s"""list_reduce(list_transform(list_zip($a, $b),
-          x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)), (p, q) -> p + q)"""
     val centRows = cents.zipWithIndex.map { case (c, i) =>
       s"(${i}, ${c.mkString("[", ", ", "]")})"
     }.mkString(", ")
     val qCap = nQueries * 5
     def scen(tag: String, deltaSrc: String) =
       s"""${tag}_n AS (SELECT vec_id, embedding,
-             sqrt(${dotE("embedding", "embedding")}) AS nrm
+             sqrt(${dotSql("embedding", "embedding")}) AS nrm
            FROM (SELECT * FROM base UNION ALL SELECT * FROM $deltaSrc)),
          ${tag}_ranked AS (
            SELECT v.vec_id, v.embedding, v.nrm, c.cell,
              row_number() OVER (PARTITION BY v.vec_id ORDER BY
-               ${dotE("v.embedding", "c.cv")} DESC, c.cell) AS crnk
+               ${dotSql("v.embedding", "c.cv")} DESC, c.cell) AS crnk
            FROM ${tag}_n v, cents c),
          ${tag}_assigned AS (SELECT cell, vec_id AS neighbor_id,
              embedding AS e_c, nrm AS n_c
@@ -2398,7 +2433,7 @@ object Similarity {
          ${tag}_truth AS (SELECT query_id, neighbor_id FROM (
              SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
                row_number() OVER (PARTITION BY q.vec_id ORDER BY
-                 ${dotE("q.embedding", "c.embedding")} / (q.nrm * c.nrm)
+                 ${dotSql("q.embedding", "c.embedding")} / (q.nrm * c.nrm)
                    DESC, c.vec_id) AS rnk
              FROM ${tag}_n q JOIN ${tag}_n c ON c.vec_id <> q.vec_id
              WHERE q.vec_id % 5 = 0 AND q.vec_id < $qCap)
@@ -2409,7 +2444,7 @@ object Similarity {
            (SELECT CAST(count(*) AS BIGINT)
             FROM (SELECT pr.query_id, a.neighbor_id,
                     row_number() OVER (PARTITION BY pr.query_id ORDER BY
-                      ${dotE("pr.e_q", "a.e_c")} / (pr.n_q * a.n_c) DESC,
+                      ${dotSql("pr.e_q", "a.e_c")} / (pr.n_q * a.n_c) DESC,
                       a.neighbor_id) AS rnk
                   FROM (SELECT cell, vec_id AS query_id, embedding AS e_q,
                           nrm AS n_q
@@ -2459,15 +2494,8 @@ object Similarity {
     val assigned = readIvfAssigned(spark, dir)
     val q = queries.select(col("vec_id"), col("embedding"),
       l2norm(col("embedding")).as("nrm"))
-    val qf = q.select(col("vec_id").as("query_id"),
-      col("embedding").as("e_q"), col("nrm").as("n_q"))
-    val cf = assigned.select(col("vec_id").as("neighbor_id"),
-      col("embedding").as("e_c"), col("nrm").as("n_c"))
-    val truth = rankTopK(cf.join(broadcast(qf),
-        col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        cosineWithNorms(dot(col("e_q"), col("e_c")), col("n_q"),
-          col("n_c")).as("cos")), k)
+    val truth = rankTopK(candidates(candVecs(assigned), queryVecs(q),
+        exactCos), k)
       .select("query_id", "neighbor_id")
     val served = annServeFromIndex(spark, dir,
         queries.select("vec_id", "embedding"), nProbe, k)
@@ -2552,19 +2580,12 @@ object Similarity {
     * parquet rows (float storage is exact). */
   def ivfRebuildOracle(nQueries: Int = 10, k: Int = 5, nProbe: Int = 4,
                        nCells: Int = 16): String = {
-    val spark = SparkSession.getActiveSession.getOrElse(
-      graft.Tables.configure(SparkSession.builder().master("local[2]")
-        .config("spark.ui.enabled", "false")).getOrCreate())
-    val sfDir = sys.props.getOrElse("graft.oracle.sfdir",
-      "/root/testdata/sf0.01")
+    val (spark, sfDir) = Tables.oracleSession()
     val v = vectors(spark, sfDir).select(col("vec_id"), col("embedding"))
     val shifted = v.filter(col("vec_id") % 5 === 0).select(col("vec_id"),
       transform(col("embedding"), x => x + lit(0.5f)).as("embedding"))
     val postCents = trainCentroids(
       v.filter(col("vec_id") % 5 =!= 0).unionByName(shifted), nCells)
-    val dotE = (a: String, b: String) =>
-      s"""list_reduce(list_transform(list_zip($a, $b),
-          x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)), (p, q) -> p + q)"""
     def centRows(cents: Array[Array[Double]]) =
       cents.zipWithIndex.map { case (c, i) =>
         s"(${i}, ${c.mkString("[", ", ", "]")})"
@@ -2574,10 +2595,10 @@ object Similarity {
     def ranked(tag: String, cents: String) =
       s"""${tag}_ranked AS (
            SELECT v.vec_id, v.embedding, c.cell,
-             ${dotE("v.embedding", "c.cv")} AS dp,
-             sqrt(${dotE("v.embedding", "v.embedding")}) AS nrm,
+             ${dotSql("v.embedding", "c.cv")} AS dp,
+             sqrt(${dotSql("v.embedding", "v.embedding")}) AS nrm,
              row_number() OVER (PARTITION BY v.vec_id ORDER BY
-               ${dotE("v.embedding", "c.cv")} DESC, c.cell) AS crnk
+               ${dotSql("v.embedding", "c.cv")} DESC, c.cell) AS crnk
            FROM cur v, $cents c)"""
     // per-cell (cnt, dsum) stats over a crnk=1 slice
     def stat(tag: String, name: String, pre: String, where: String) =
@@ -2610,7 +2631,7 @@ object Similarity {
       s"""${tag}_truth AS (SELECT query_id, neighbor_id FROM (
              SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
                row_number() OVER (PARTITION BY q.vec_id ORDER BY
-                 ${dotE("q.embedding", "c.embedding")} / (q.nrm * c.nrm)
+                 ${dotSql("q.embedding", "c.embedding")} / (q.nrm * c.nrm)
                    DESC, c.vec_id) AS rnk
              FROM ${tag}_ranked q
              JOIN ${tag}_ranked c ON c.crnk = 1 AND c.vec_id <> q.vec_id
@@ -2630,7 +2651,7 @@ object Similarity {
            (SELECT CAST(count(*) AS BIGINT)
             FROM (SELECT pr.query_id, a.neighbor_id,
                     row_number() OVER (PARTITION BY pr.query_id ORDER BY
-                      ${dotE("pr.e_q", "a.e_c")} / (pr.n_q * a.n_c) DESC,
+                      ${dotSql("pr.e_q", "a.e_c")} / (pr.n_q * a.n_c) DESC,
                       a.neighbor_id) AS rnk
                   FROM (SELECT cell, vec_id AS query_id,
                           embedding AS e_q, nrm AS n_q
@@ -2685,9 +2706,6 @@ object Similarity {
     * and unioned. */
   def ivfDriftOracle(): String = {
     val cents = staticCentroids()
-    val dotE = (a: String, b: String) =>
-      s"""list_reduce(list_transform(list_zip($a, $b),
-          x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)), (p, q) -> p + q)"""
     val centRows = cents.zipWithIndex.map { case (c, i) =>
       s"(${i}, ${c.mkString("[", ", ", "]")})"
     }.mkString(", ")
@@ -2697,10 +2715,10 @@ object Similarity {
     def stats(src: String, tag: String, pre: String) =
       s"""${tag}_scored AS (
            SELECT v.vec_id, c.cell,
-             ${dotE("v.embedding", "c.cv")} AS dp,
-             sqrt(${dotE("v.embedding", "v.embedding")}) AS nrm,
+             ${dotSql("v.embedding", "c.cv")} AS dp,
+             sqrt(${dotSql("v.embedding", "v.embedding")}) AS nrm,
              row_number() OVER (PARTITION BY v.vec_id ORDER BY
-               ${dotE("v.embedding", "c.cv")} DESC, c.cell) AS crnk
+               ${dotSql("v.embedding", "c.cv")} DESC, c.cell) AS crnk
            FROM $src v, cents c),
          ${tag}_stat AS (
            SELECT cell, CAST(count(*) AS BIGINT) AS ${pre}_cnt,
@@ -2875,19 +2893,12 @@ object Similarity {
     * code argmin (biased dot DESC, code ASC), the SAME three-term 8-dp
     * decimal error, and the shared-baseline join per scenario. */
   def pqDriftOracle(staleRatio: Double = 1.5): String = {
-    val spark = SparkSession.getActiveSession.getOrElse(
-      graft.Tables.configure(SparkSession.builder().master("local[2]")
-        .config("spark.ui.enabled", "false")).getOrCreate())
-    val sfDir = sys.props.getOrElse("graft.oracle.sfdir",
-      "/root/testdata/sf0.01")
+    val (spark, sfDir) = Tables.oracleSession()
     val v = vectors(spark, sfDir).select(col("vec_id"), col("embedding"))
     val cbs = withTrainCache(v.filter(col("vec_id") % 5 =!= 0))(
       trainPqCodebooks(_))
     val nSub = cbs.length
     val sub = cbs.head.head.length
-    val dotE = (a: String, b: String) =>
-      s"""list_reduce(list_transform(list_zip($a, $b),
-          x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)), (p, q) -> p + q)"""
     val cbRows = (for {
       m <- 0 until nSub
       kk <- cbs(m).indices
@@ -2901,11 +2912,11 @@ object Similarity {
          ${tag}_coded AS (SELECT vec_id, m, s, cv, bias FROM (
              SELECT t.vec_id, t.m, t.s, cb.cv, cb.bias,
                row_number() OVER (PARTITION BY t.vec_id, t.m
-                 ORDER BY (${dotE("t.s", "cb.cv")} + cb.bias) DESC,
+                 ORDER BY (${dotSql("t.s", "cb.cv")} + cb.bias) DESC,
                    cb.kk) AS r
              FROM ${tag}_sub t JOIN cb ON cb.m = t.m) WHERE r = 1),
          ${tag}_stat AS (SELECT m, CAST(count(*) AS BIGINT) AS ${pre}_cnt,
-             sum(CAST(round(${dotE("s", "s")} - 2 * ${dotE("s", "cv")}
+             sum(CAST(round(${dotSql("s", "s")} - 2 * ${dotSql("s", "cv")}
                - 2 * bias, 8) AS DECIMAL(18,8))) AS ${pre}_esum
            FROM ${tag}_coded GROUP BY m)"""
     def scen(tag: String) =
@@ -3053,32 +3064,10 @@ object Similarity {
     * join the cell-partitioned inverted lists. */
   def annServeFromIndex(spark: SparkSession, dir: String, queries: DataFrame,
                         nProbe: Int = 4, k: Int = 5): DataFrame = {
-    requireRawIndex(spark, dir)
-    serveFromIndexUnchecked(spark, dir, queries, nProbe, k)
-  }
-
-  /** The probe/rank body [[annServeFromIndex]] guards — shared with
-    * [[annServeWhitenedFromIndex]], whose queries arrive ALREADY in
-    * the artifact's (whitened) space. */
-  private def serveFromIndexUnchecked(spark: SparkSession, dir: String,
-                                      queries: DataFrame, nProbe: Int,
-                                      k: Int): DataFrame = {
-    val cents = readIvfCentroids(spark, dir)
-    val assigned = readIvfAssigned(spark, dir)
-      .select(col("cell"), col("vec_id").as("neighbor_id"),
-        col("embedding").as("e_c"), col("nrm").as("n_c"))
-    val probes = queries
-      .select(col("vec_id").as("query_id"), col("embedding").as("e_q"),
-        l2norm(col("embedding")).as("n_q"),
-        explode(graft.functions.VectorQuantize
-          .nearestCells(col("embedding"), cents, nProbe)).as("cell"))
-    rankTopK(
-      assigned.join(broadcast(probes), Seq("cell"))
-        .filter(col("query_id") =!= col("neighbor_id"))
-        .select(col("query_id"), col("neighbor_id"),
-          cosineWithNorms(dot(col("e_q"), col("e_c")), col("n_q"), col("n_c"))
-            .as("cos")),
-      k)
+    val (cents, lists) = indexLists(spark, dir)
+    rankTopK(candidates(lists,
+      probeFrame(queries, cents, nProbe, l2norm(col("embedding"))),
+      exactCos), k)
   }
 
   /** §2 #150 — IVF serving FROM THE ARTIFACT: build the index once
@@ -3088,18 +3077,9 @@ object Similarity {
     * same probes, same ranking — which the shared oracle and
     * SimilaritySpec both pin. */
   def annIvfIndexed(spark: SparkSession, sfDir: String, nProbe: Int = 4,
-                    nQueries: Int = 10, k: Int = 5): DataFrame = {
-    // per-run UUID subdir: concurrent runs must not overwrite each
-    // other's artifact mid-read
-    val dir = ExportImport.scratch(
-      s"ivf-index/run-${java.util.UUID.randomUUID()}")
-    ivfIndexToDir(spark, sfDir, dir)
-    annServeFromIndex(spark, dir,
-      Tables.load(spark, sfDir, "embeddings")
-        .filter(col("vec_id") < nQueries)
-        .select(col("vec_id"), col("embedding")),
-      nProbe, k)
-  }
+                    nQueries: Int = 10, k: Int = 5): DataFrame =
+    serveFreshIndex(spark, sfDir, "ivf-index", nQueries)(
+      ivfIndexToDir(spark, sfDir, _))(annServeFromIndex(spark, _, _, nProbe, k))
 
   /** SQ8 serving FROM an IVF index artifact: like
     * [[annServeFromIndex]] but stage 1 scores the probed cells with
@@ -3112,42 +3092,10 @@ object Similarity {
   def annServeSq8FromIndex(spark: SparkSession, dir: String,
                            queries: DataFrame, nProbe: Int = 4, k: Int = 5,
                            shortlistFactor: Int = 8): DataFrame = {
-    requireRawIndex(spark, dir)
-    val cents = readIvfCentroids(spark, dir)
-    val assigned = readIvfAssigned(spark, dir)
-      .select(col("cell"), col("vec_id").as("neighbor_id"),
-        col("embedding").as("e_c"), col("nrm").as("n_c"))
-    // the candidate scan reads the dequantized serving vector, built
-    // once per candidate — the 1-byte/dim read path at scale
-    val scan = assigned.select(col("cell"), col("neighbor_id"),
-      graft.functions.Sq8Dequant.dequant(col("e_c")).as("d"))
-      .withColumn("n_d", l2norm(col("d")))
-    val probes = queries
-      .select(col("vec_id").as("query_id"), col("embedding").as("e_q"),
-        l2norm(col("embedding")).as("n_q"),
-        explode(graft.functions.VectorQuantize
-          .nearestCells(col("embedding"), cents, nProbe)).as("cell"))
-    val short = scan
-      .join(broadcast(probes), Seq("cell"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        cosineWithNorms(dot(col("e_q"), col("d")), col("n_q"), col("n_d"))
-          .as("score"))
-      .groupBy("query_id")
-      .agg(graft.functions.TopKByScoreAgg.topkByScore(
-        col("neighbor_id"), col("score"), shortlistFactor * k).as("top"))
-      .select(col("query_id"), explode(col("top.neighbor_id"))
-        .as("neighbor_id"))
-    rankTopK(
-      short
-        .join(assigned.select(col("neighbor_id"), col("e_c"), col("n_c")),
-          Seq("neighbor_id"))
-        .join(broadcast(probes.select("query_id", "e_q", "n_q").distinct()),
-          Seq("query_id"))
-        .select(col("query_id"), col("neighbor_id"),
-          cosineWithNorms(dot(col("e_q"), col("e_c")), col("n_q"), col("n_c"))
-            .as("cos")),
-      k)
+    val (cents, lists) = indexLists(spark, dir)
+    val probes = probeFrame(queries, cents, nProbe, l2norm(col("embedding")))
+    exactRerank(sq8Shortlist(lists, probes, shortlistFactor * k), lists,
+      probes.select("query_id", "e_q", "n_q").distinct(), k)
   }
 
   /** §2 #237 — IVF-SQ8 serving FROM THE ARTIFACT: build the standard
@@ -3159,16 +3107,10 @@ object Similarity {
     * ([[ivfSq8StaticOracle]]) and SimilaritySpec both pin. */
   def annIvfSq8Indexed(spark: SparkSession, sfDir: String,
                        nProbe: Int = 4, nQueries: Int = 10,
-                       k: Int = 5): DataFrame = {
-    val dir = ExportImport.scratch(
-      s"ivf-index/run-${java.util.UUID.randomUUID()}")
-    ivfIndexToDir(spark, sfDir, dir)
-    annServeSq8FromIndex(spark, dir,
-      Tables.load(spark, sfDir, "embeddings")
-        .filter(col("vec_id") < nQueries)
-        .select(col("vec_id"), col("embedding")),
-      nProbe, k)
-  }
+                       k: Int = 5): DataFrame =
+    serveFreshIndex(spark, sfDir, "ivf-index", nQueries)(
+      ivfIndexToDir(spark, sfDir, _))(
+      annServeSq8FromIndex(spark, _, _, nProbe, k))
 
   /** Oracle for [[annIvfSq8Indexed]]: the [[ivfSq8TrainedOracle]]
     * replay over the STATIC quantizer the artifact build pins. */
@@ -3187,11 +3129,11 @@ object Similarity {
     * Scale shape: the expensive stage is the same exact shortlist scan
     * every ANN variant uses (bounded TopK, swap in any index path
     * unchanged above the ranking); everything after is
-    * shortlist-bounded — the pair stage is (f·k)² rows per query, the
-    * k greedy rounds are fixed-size joins over the PERSISTED shortlist/
-    * pair frames (KB-sized model state, the truth-frame doctrine), so
-    * the selection never touches the corpus again and never loops on
-    * the driver. Fully deterministic (ties → lower id), so the DuckDB
+    * shortlist-bounded — [[mmrRerank]] collects the ≤ nQueries·f·k
+    * shortlist rows and their candidate vectors and runs the pair
+    * similarities and the k greedy rounds on the DRIVER (model-state
+    * work, not data work), so the selection never touches the corpus
+    * again. Fully deterministic (ties → lower id), so the DuckDB
     * oracle replays the whole greedy unrolled — STATIC SQL, no trained
     * literals. */
   def annMmr(spark: SparkSession, sfDir: String, nQueries: Int = 10,
@@ -3212,31 +3154,16 @@ object Similarity {
     def withNrm(df: DataFrame) =
       if (df.columns.contains("nrm")) df
       else df.withColumn("nrm", l2norm(col("embedding")))
-    val queries = withNrm(queryFrame)
-      .select(col("vec_id").as("query_id"), col("embedding").as("e_q"),
-        col("nrm").as("n_q"))
-    val cEmb = withNrm(corpus).select(col("vec_id").as("cand_id"),
-      col("embedding").as("e_c"), col("nrm").as("n_c"))
-    // stage 1 — exact cosine shortlist (the brute scan + bounded TopK)
-    val short = cEmb
-      .join(broadcast(queries), col("query_id") =!= col("cand_id"))
-      .select(col("query_id"), col("cand_id"),
-        cosineWithNorms(dot(col("e_q"), col("e_c")), col("n_q"), col("n_c"))
-          .as("cosq"))
-      .groupBy("query_id")
-      .agg(graft.functions.TopKByScoreAgg.topkByScore(
-        col("cand_id"), col("cosq"), shortlistFactor * k).as("top"))
-      .select(col("query_id"), explode(col("top")).as("e"))
-      .select(col("query_id"), col("e.neighbor_id").as("cand_id"),
-        col("e.cos").as("cosq"))
-    mmrRerank(short, cEmb, k, lambda)
+    val cands = candVecs(withNrm(corpus))
+    // stage 1 — exact cosine shortlist (the flat scan + bounded TopK)
+    mmrRerank(rankTopKFull(candidates(cands, queryVecs(withNrm(queryFrame)),
+      exactCos), shortlistFactor * k), cands, k, lambda)
   }
 
-  /** MMR stages 2–3 over ANY (query_id, cand_id, cosq) shortlist and
-    * (cand_id, e_c, n_c) candidate-embedding source — shared by the
-    * brute form ([[annMmrFrames]]) and the artifact-served form
-    * ([[annMmrFromIndex]]), so the greedy selection arithmetic cannot
-    * drift between them.
+  /** MMR stages 2–3 over ANY (query_id, neighbor_id, cos) shortlist and
+    * (neighbor_id, e_c, n_c) candidate-embedding source — shared by
+    * every MMR serving form (flat, IVF, sq8, ADC), so the greedy
+    * selection arithmetic cannot drift between them.
     *
     * The shortlist is BOUNDED by construction (≤ nQueries ×
     * shortlistFactor·k rows — its producer is always a bounded TopK
@@ -3253,12 +3180,12 @@ object Similarity {
     * double-cast dot ([[graft.functions.DotProduct]]'s contract), the
     * same cos = dot/(n_a·n_b), msim = max(cab) over selected,
     * mmr = λ·cosq − (1−λ)·msim, tie-break (mmr desc, cand_id asc). */
-  private def mmrRerank(shortRaw: DataFrame, cEmb: DataFrame, k: Int,
+  private def mmrRerank(shortRaw: DataFrame, cands: DataFrame, k: Int,
                         lambda: Double): DataFrame = {
     val spark = shortRaw.sparkSession
     val shortRows = shortRaw
-      .select(col("query_id").cast("long"), col("cand_id").cast("long"),
-        col("cosq").cast("double"))
+      .select(col("query_id").cast("long"), col("neighbor_id").cast("long"),
+        col("cos").cast("double"))
       .collect()
     require(shortRows.length <= 2000000,
       s"MMR shortlist collected ${shortRows.length} rows — the bounded " +
@@ -3276,14 +3203,14 @@ object Similarity {
     // against a local id frame: same rows, hash-lookup pruning.
     val candFetch =
       if (candIds.length <= 10000)
-        cEmb.filter(col("cand_id").isin(candIds.map(Long.box).toSeq: _*))
+        cands.filter(col("neighbor_id").isin(candIds.map(Long.box).toSeq: _*))
       else {
         import spark.implicits._
-        cEmb.join(broadcast(candIds.toSeq.toDF("cand_id")),
-          Seq("cand_id"), "left_semi")
+        cands.join(broadcast(candIds.toSeq.toDF("neighbor_id")),
+          Seq("neighbor_id"), "left_semi")
       }
     val embRows = candFetch
-      .select(col("cand_id").cast("long"), col("e_c"),
+      .select(col("neighbor_id").cast("long"), col("e_c"),
         col("n_c").cast("double"))
       .collect()
     val emb = new scala.collection.mutable.HashMap[Long, (Array[Double], Double)]
@@ -3297,7 +3224,7 @@ object Similarity {
     }
     def embOf(id: Long): (Array[Double], Double) = emb.getOrElse(id,
       throw new IllegalArgumentException(
-        s"MMR shortlist references cand_id=$id with no embedding row in " +
+        s"MMR shortlist references neighbor_id=$id with no embedding row in " +
           "the candidate source — shortlist and corpus frames disagree"))
     def cos(aId: Long, bId: Long): Double = {
       val (ea, na) = embOf(aId)
@@ -3355,33 +3282,16 @@ object Similarity {
     *
     * Scale shape: broadcast probes against cell-partitioned inverted
     * lists (partition-pruned scan), bounded TopK shortlist, then the
-    * greedy rounds over persisted KB-sized frames — the corpus is
-    * touched once, in its cheapest indexed form. */
+    * greedy rounds on the driver over the collected shortlist
+    * ([[mmrRerank]]) — the corpus is touched once, in its cheapest
+    * indexed form. */
   def annMmrFromIndex(spark: SparkSession, dir: String, queryFrame: DataFrame,
                       nProbe: Int = 4, k: Int = 5, shortlistFactor: Int = 8,
                       lambda: Double = 0.7): DataFrame = {
-    requireRawIndex(spark, dir)
-    val cents = readIvfCentroids(spark, dir)
-    val assigned = readIvfAssigned(spark, dir)
-      .select(col("cell"), col("vec_id").as("cand_id"),
-        col("embedding").as("e_c"), col("nrm").as("n_c"))
-    val probes = queryFrame
-      .select(col("vec_id").as("query_id"), col("embedding").as("e_q"),
-        l2norm(col("embedding")).as("n_q"),
-        explode(graft.functions.VectorQuantize
-          .nearestCells(col("embedding"), cents, nProbe)).as("cell"))
-    val short = assigned.join(broadcast(probes), Seq("cell"))
-      .filter(col("query_id") =!= col("cand_id"))
-      .select(col("query_id"), col("cand_id"),
-        cosineWithNorms(dot(col("e_q"), col("e_c")), col("n_q"), col("n_c"))
-          .as("cosq"))
-      .groupBy("query_id")
-      .agg(graft.functions.TopKByScoreAgg.topkByScore(
-        col("cand_id"), col("cosq"), shortlistFactor * k).as("top"))
-      .select(col("query_id"), explode(col("top")).as("e"))
-      .select(col("query_id"), col("e.neighbor_id").as("cand_id"),
-        col("e.cos").as("cosq"))
-    mmrRerank(short, assigned.select("cand_id", "e_c", "n_c"), k, lambda)
+    val (cents, lists) = indexLists(spark, dir)
+    val probes = probeFrame(queryFrame, cents, nProbe, l2norm(col("embedding")))
+    mmrRerank(rankTopKFull(candidates(lists, probes, exactCos),
+      shortlistFactor * k), lists, k, lambda)
   }
 
   /** MMR with its stage-1 shortlist from the SQ8 SCAN (VERDICT-r18
@@ -3400,45 +3310,12 @@ object Similarity {
                          k: Int = 5, shortlistFactor: Int = 8,
                          lambda: Double = 0.7,
                          preFactor: Int = 2): DataFrame = {
-    requireRawIndex(spark, dir)
-    val cents = readIvfCentroids(spark, dir)
-    val assigned = readIvfAssigned(spark, dir)
-      .select(col("cell"), col("vec_id").as("cand_id"),
-        col("embedding").as("e_c"), col("nrm").as("n_c"))
-    val scan = assigned.select(col("cell"), col("cand_id"),
-      graft.functions.Sq8Dequant.dequant(col("e_c")).as("d"))
-      .withColumn("n_d", l2norm(col("d")))
-    val probes = queryFrame
-      .select(col("vec_id").as("query_id"), col("embedding").as("e_q"),
-        l2norm(col("embedding")).as("n_q"),
-        explode(graft.functions.VectorQuantize
-          .nearestCells(col("embedding"), cents, nProbe)).as("cell"))
-    val pre = scan.join(broadcast(probes), Seq("cell"))
-      .filter(col("query_id") =!= col("cand_id"))
-      .select(col("query_id"), col("cand_id"),
-        cosineWithNorms(dot(col("e_q"), col("d")), col("n_q"), col("n_d"))
-          .as("score"))
-      .groupBy("query_id")
-      .agg(graft.functions.TopKByScoreAgg.topkByScore(
-        col("cand_id"), col("score"),
-        preFactor * shortlistFactor * k).as("top"))
-      .select(col("query_id"), explode(col("top.neighbor_id"))
-        .as("cand_id"))
-    val short = pre
-      .join(assigned.select(col("cand_id"), col("e_c"), col("n_c")),
-        Seq("cand_id"))
-      .join(broadcast(probes.select("query_id", "e_q", "n_q").distinct()),
-        Seq("query_id"))
-      .select(col("query_id"), col("cand_id"),
-        cosineWithNorms(dot(col("e_q"), col("e_c")), col("n_q"),
-          col("n_c")).as("cosq"))
-      .groupBy("query_id")
-      .agg(graft.functions.TopKByScoreAgg.topkByScore(
-        col("cand_id"), col("cosq"), shortlistFactor * k).as("top"))
-      .select(col("query_id"), explode(col("top")).as("e"))
-      .select(col("query_id"), col("e.neighbor_id").as("cand_id"),
-        col("e.cos").as("cosq"))
-    mmrRerank(short, assigned.select("cand_id", "e_c", "n_c"), k, lambda)
+    val (cents, lists) = indexLists(spark, dir)
+    val probes = probeFrame(queryFrame, cents, nProbe, l2norm(col("embedding")))
+    val pre = sq8Shortlist(lists, probes, preFactor * shortlistFactor * k)
+    mmrRerank(rankTopKFull(exactScored(pre, lists,
+        probes.select("query_id", "e_q", "n_q").distinct()),
+      shortlistFactor * k), lists, k, lambda)
   }
 
   /** §2 #250 — MMR OVER THE SQ8 SCAN, FROM THE ARTIFACT: the standard
@@ -3450,16 +3327,10 @@ object Similarity {
   def annMmrSq8Indexed(spark: SparkSession, sfDir: String,
                        nProbe: Int = 4, nQueries: Int = 10, k: Int = 5,
                        shortlistFactor: Int = 8, lambda: Double = 0.7,
-                       preFactor: Int = 2): DataFrame = {
-    val dir = ExportImport.scratch(
-      s"ivf-index/run-${java.util.UUID.randomUUID()}")
-    ivfIndexToDir(spark, sfDir, dir)
-    annMmrSq8FromIndex(spark, dir,
-      Tables.load(spark, sfDir, "embeddings")
-        .filter(col("vec_id") < nQueries)
-        .select(col("vec_id"), col("embedding")),
-      nProbe, k, shortlistFactor, lambda, preFactor)
-  }
+                       preFactor: Int = 2): DataFrame =
+    serveFreshIndex(spark, sfDir, "ivf-index", nQueries)(
+      ivfIndexToDir(spark, sfDir, _))(annMmrSq8FromIndex(spark, _, _,
+      nProbe, k, shortlistFactor, lambda, preFactor))
 
   /** DuckDB replay for [[annMmrSq8Indexed]]: [[mmrOracleOver]]'s
     * greedy rounds fed by the sq8 two-stage shortlist — static-IVF
@@ -3470,7 +3341,6 @@ object Similarity {
                           k: Int = 5, shortlistFactor: Int = 8,
                           lambda: Double = 0.7,
                           preFactor: Int = 2): String = {
-    val dot = mmrDotSql _
     val centRows = staticCentroids().zipWithIndex.map { case (c, i) =>
       s"(${i}, ${c.mkString("[", ", ", "]")})"
     }.mkString(", ")
@@ -3479,13 +3349,13 @@ object Similarity {
         ranked AS (
           SELECT v.vec_id, v.embedding, v.nrm, c.cell,
             row_number() OVER (PARTITION BY v.vec_id ORDER BY
-              ${dot("v.embedding", "c.cv")} DESC, c.cell) AS crnk
+              ${dotSql("v.embedding", "c.cv")} DESC, c.cell) AS crnk
           FROM nv v, cents c),
         assigned AS (SELECT cell, vec_id AS cand_id, embedding AS e_c,
                        nrm AS n_c FROM ranked WHERE crnk = 1),
         dq AS ($sq8DequantCteBody),
         acand AS (SELECT a.cell, a.cand_id, d.d,
-                    sqrt(${dot("d.d", "d.d")}) AS n_d
+                    sqrt(${dotSql("d.d", "d.d")}) AS n_d
                   FROM assigned a JOIN dq d ON d.vec_id = a.cand_id),
         probes AS (SELECT cell, vec_id AS query_id, embedding AS e_q,
                      nrm AS n_q
@@ -3494,17 +3364,17 @@ object Similarity {
         pre AS (SELECT query_id, cand_id FROM (
             SELECT p.query_id, n.cand_id,
               row_number() OVER (PARTITION BY p.query_id ORDER BY
-                (${dot("p.e_q", "n.d")} / (p.n_q * n.n_d)) DESC,
+                (${dotSql("p.e_q", "n.d")} / (p.n_q * n.n_d)) DESC,
                 n.cand_id) AS r
             FROM probes p JOIN acand n ON n.cell = p.cell
             WHERE n.cand_id <> p.query_id)
           WHERE r <= ${preFactor * shortlistFactor * k}),
         short AS (SELECT query_id, cand_id, cosq FROM (
             SELECT pr.query_id, pr.cand_id,
-              ${dot("qv.embedding", "cv.embedding")}
+              ${dotSql("qv.embedding", "cv.embedding")}
                 / (qv.nrm * cv.nrm) AS cosq,
               row_number() OVER (PARTITION BY pr.query_id ORDER BY
-                ${dot("qv.embedding", "cv.embedding")}
+                ${dotSql("qv.embedding", "cv.embedding")}
                   / (qv.nrm * cv.nrm) DESC, pr.cand_id) AS r
             FROM pre pr
             JOIN nv qv ON qv.vec_id = pr.query_id
@@ -3522,18 +3392,11 @@ object Similarity {
                          shortlistFactor: Int = 8,
                          lambda: Double = 0.7,
                          preFactor: Int = 2): String = {
-    val spark = SparkSession.getActiveSession.getOrElse(
-      graft.Tables.configure(SparkSession.builder().master("local[2]")
-        .config("spark.ui.enabled", "false")).getOrCreate())
-    val sfDir = sys.props.getOrElse("graft.oracle.sfdir",
-      "/root/testdata/sf0.01")
+    val (spark, sfDir) = Tables.oracleSession()
     val v = vectors(spark, sfDir)
-    val (cents, cbs) =
-      withTrainCache(v)(vc => (trainCentroids(vc, nCells),
-        trainPqCodebooks(vc)))
+    val (cents, cbs) = ivfPqModels(v, nCells)
     val nSub = cbs.length
     val sub = cbs.head.head.length
-    val dot = mmrDotSql _
     val centRows = cents.zipWithIndex.map { case (c, i) =>
       s"(${i}, ${c.mkString("[", ", ", "]")})"
     }.mkString(", ")
@@ -3543,7 +3406,7 @@ object Similarity {
     val adc = (0 until nSub).map { m =>
       val lo = m * sub + 1
       val hi = (m + 1) * sub
-      s"${dot(s"p.e_s[$lo:$hi]", s"cbl.cb[${m + 1}][n.c$m + 1]")}"
+      s"${dotSql(s"p.e_s[$lo:$hi]", s"cbl.cb[${m + 1}][n.c$m + 1]")}"
     }.mkString(" + ")
     mmrOracleOver(
       s"""cents(cell, cv) AS (VALUES $centRows),
@@ -3552,7 +3415,7 @@ object Similarity {
         ranked AS (
           SELECT v.vec_id, v.embedding, v.nrm, c.cell,
             row_number() OVER (PARTITION BY v.vec_id ORDER BY
-              ${dot("v.embedding", "c.cv")} DESC, c.cell) AS crnk
+              ${dotSql("v.embedding", "c.cv")} DESC, c.cell) AS crnk
           FROM nv v, cents c),
         sub AS (SELECT vec_id, mm.m AS m,
                   embedding[mm.m * $sub + 1 : (mm.m + 1) * $sub] AS s
@@ -3561,7 +3424,7 @@ object Similarity {
         coded AS (SELECT vec_id, m, kk FROM (
                     SELECT sub.vec_id, sub.m, cb.kk,
                       row_number() OVER (PARTITION BY sub.vec_id, sub.m
-                        ORDER BY (${dot("sub.s", "cb.cv")} + cb.bias) DESC,
+                        ORDER BY (${dotSql("sub.s", "cb.cv")} + cb.bias) DESC,
                           cb.kk) AS r
                     FROM sub JOIN cb ON cb.m = sub.m)
                   WHERE r = 1),
@@ -3584,10 +3447,10 @@ object Similarity {
         -- encode + ADC chain 2k+ times and exhaust the checker's memory
         short AS MATERIALIZED (SELECT query_id, cand_id, cosq FROM (
             SELECT pr.query_id, pr.cand_id,
-              ${dot("qv.embedding", "cv.embedding")}
+              ${dotSql("qv.embedding", "cv.embedding")}
                 / (qv.nrm * cv.nrm) AS cosq,
               row_number() OVER (PARTITION BY pr.query_id ORDER BY
-                ${dot("qv.embedding", "cv.embedding")}
+                ${dotSql("qv.embedding", "cv.embedding")}
                   / (qv.nrm * cv.nrm) DESC, pr.cand_id) AS r
             FROM pre pr
             JOIN nv qv ON qv.vec_id = pr.query_id
@@ -3602,37 +3465,23 @@ object Similarity {
   def annMmrIndexed(spark: SparkSession, sfDir: String, nProbe: Int = 4,
                     nQueries: Int = 10, k: Int = 5,
                     shortlistFactor: Int = 8,
-                    lambda: Double = 0.7): DataFrame = {
-    val dir = ExportImport.scratch(
-      s"ivf-index/run-${java.util.UUID.randomUUID()}")
-    ivfIndexToDir(spark, sfDir, dir)
-    annMmrFromIndex(spark, dir,
-      Tables.load(spark, sfDir, "embeddings")
-        .filter(col("vec_id") < nQueries)
-        .select(col("vec_id"), col("embedding")),
-      nProbe, k, shortlistFactor, lambda)
-  }
+                    lambda: Double = 0.7): DataFrame =
+    serveFreshIndex(spark, sfDir, "ivf-index", nQueries)(
+      ivfIndexToDir(spark, sfDir, _))(annMmrFromIndex(spark, _, _,
+      nProbe, k, shortlistFactor, lambda))
 
   /** DuckDB replay for [[annMmr]] — static SQL with the k greedy
     * rounds UNROLLED (sel1..selK + cumulative selected sets): the same
     * shortlist/pair arithmetic, the same `λ·cosq − (1−λ)·max` formula
     * with the same literal λ, the same (mmr DESC, id) tie-break. */
-  /** The DuckDB dot-product fragment the MMR oracle builders share
-    * (the file's older oracles predate the helper and keep their local
-    * copies — consolidation tracked as cleanup, not a defect). */
-  private def mmrDotSql(a: String, b: String): String =
-    s"""list_reduce(list_transform(list_zip($a, $b),
-        x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)), (p, q) -> p + q)"""
-
   def mmrOracle(nQueries: Int = 10, k: Int = 5, shortlistFactor: Int = 8,
                 lambda: Double = 0.7): String = {
-    val dot = mmrDotSql _
     mmrOracleOver(
       s"""short AS (SELECT query_id, cand_id, cosq FROM (
             SELECT q.vec_id AS query_id, c.vec_id AS cand_id,
-              ${dot("q.embedding", "c.embedding")} / (q.nrm * c.nrm) AS cosq,
+              ${dotSql("q.embedding", "c.embedding")} / (q.nrm * c.nrm) AS cosq,
               row_number() OVER (PARTITION BY q.vec_id ORDER BY
-                ${dot("q.embedding", "c.embedding")} / (q.nrm * c.nrm) DESC,
+                ${dotSql("q.embedding", "c.embedding")} / (q.nrm * c.nrm) DESC,
                 c.vec_id) AS r
             FROM nv q JOIN nv c ON c.vec_id <> q.vec_id
             WHERE q.vec_id < $nQueries)
@@ -3647,7 +3496,6 @@ object Similarity {
   def mmrIndexedOracle(nProbe: Int = 4, nQueries: Int = 10, k: Int = 5,
                        shortlistFactor: Int = 8,
                        lambda: Double = 0.7): String = {
-    val dot = mmrDotSql _
     val centRows = staticCentroids().zipWithIndex.map { case (c, i) =>
       s"(${i}, ${c.mkString("[", ", ", "]")})"
     }.mkString(", ")
@@ -3656,7 +3504,7 @@ object Similarity {
         ranked AS (
           SELECT v.vec_id, v.embedding, v.nrm, c.cell,
             row_number() OVER (PARTITION BY v.vec_id ORDER BY
-              ${dot("v.embedding", "c.cv")} DESC, c.cell) AS crnk
+              ${dotSql("v.embedding", "c.cv")} DESC, c.cell) AS crnk
           FROM nv v, cents c),
         assigned AS (SELECT cell, vec_id AS cand_id, embedding AS e_c,
                        nrm AS n_c FROM ranked WHERE crnk = 1),
@@ -3665,9 +3513,9 @@ object Similarity {
                    FROM ranked WHERE crnk <= $nProbe AND vec_id < $nQueries),
         short AS (SELECT query_id, cand_id, cosq FROM (
             SELECT p.query_id, a.cand_id,
-              ${dot("p.e_q", "a.e_c")} / (p.n_q * a.n_c) AS cosq,
+              ${dotSql("p.e_q", "a.e_c")} / (p.n_q * a.n_c) AS cosq,
               row_number() OVER (PARTITION BY p.query_id ORDER BY
-                ${dot("p.e_q", "a.e_c")} / (p.n_q * a.n_c) DESC,
+                ${dotSql("p.e_q", "a.e_c")} / (p.n_q * a.n_c) DESC,
                 a.cand_id) AS r
             FROM probes p JOIN assigned a ON p.cell = a.cell
             WHERE p.query_id <> a.cand_id)
@@ -3681,7 +3529,6 @@ object Similarity {
     * drift in the selection arithmetic. */
   private def mmrOracleOver(shortCtes: String, k: Int,
                             lambda: Double): String = {
-    val dot = mmrDotSql _
     val lam = lambda.toString
     val oneMinus = (1.0 - lambda).toString
     // k = 1 has no later rounds: emit NO trailing CTE (a dangling
@@ -3711,11 +3558,11 @@ object Similarity {
       .map(r => s"SELECT query_id, cand_id, $r AS rnk, cosq, mmr FROM sel$r")
       .mkString(" UNION ALL ")
     s"""WITH nv AS (SELECT vec_id, embedding,
-                 sqrt(${dot("embedding", "embedding")}) AS nrm
+                 sqrt(${dotSql("embedding", "embedding")}) AS nrm
                FROM embeddings),
         $shortCtes,
         pairs AS (SELECT a.query_id, a.cand_id AS a_id, b.cand_id AS b_id,
-            ${dot("ea.embedding", "eb.embedding")} / (ea.nrm * eb.nrm) AS cab
+            ${dotSql("ea.embedding", "eb.embedding")} / (ea.nrm * eb.nrm) AS cab
           FROM short a
           JOIN short b ON b.query_id = a.query_id
                       AND b.cand_id <> a.cand_id
@@ -3800,34 +3647,27 @@ object Similarity {
     * smaller delta id. */
   def semanticDedupIncrementalOracle(nCells: Int = 16,
                                      tau: Double = 0.4): String = {
-    val spark = SparkSession.getActiveSession.getOrElse(
-      graft.Tables.configure(SparkSession.builder().master("local[2]")
-        .config("spark.ui.enabled", "false")).getOrCreate())
-    val sfDir = sys.props.getOrElse("graft.oracle.sfdir",
-      "/root/testdata/sf0.01")
+    val (spark, sfDir) = Tables.oracleSession()
     val cents = withTrainCache(vectors(spark, sfDir))(
       trainCentroids(_, nCells))
-    val dot = (a: String, b: String) =>
-      s"""list_reduce(list_transform(list_zip($a, $b),
-          x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)), (p, q) -> p + q)"""
     val centRows = cents.zipWithIndex.map { case (c, i) =>
       s"(${i}, ${c.mkString("[", ", ", "]")})"
     }.mkString(", ")
     s"""WITH n AS (SELECT vec_id, embedding,
-          sqrt(${dot("embedding", "embedding")}) AS nrm FROM embeddings),
+          sqrt(${dotSql("embedding", "embedding")}) AS nrm FROM embeddings),
         cents(cell, cv) AS (VALUES $centRows),
         assigned AS (SELECT vec_id, embedding, nrm, cell,
                             vec_id % 5 = 0 AS is_base FROM (
           SELECT v.vec_id, v.embedding, v.nrm, c.cell,
             row_number() OVER (PARTITION BY v.vec_id ORDER BY
-              ${dot("v.embedding", "c.cv")} DESC, c.cell) AS crnk
+              ${dotSql("v.embedding", "c.cv")} DESC, c.cell) AS crnk
           FROM n v, cents c) WHERE crnk = 1),
         dup AS (SELECT a.vec_id
                 FROM assigned a JOIN assigned b
                   ON a.cell = b.cell AND NOT a.is_base
                   AND (b.is_base OR b.vec_id < a.vec_id)
                   AND a.vec_id <> b.vec_id
-                WHERE ${dot("a.embedding", "b.embedding")}
+                WHERE ${dotSql("a.embedding", "b.embedding")}
                         / (a.nrm * b.nrm) >= $tau
                 GROUP BY 1)
         SELECT a.vec_id, a.cell,
@@ -3859,8 +3699,7 @@ object Similarity {
     rankTopK(
       cands.join(broadcast(anchors), col("lab_q") =!= col("lab_c"))
         .select(col("query_id"), col("neighbor_id"),
-          cosineWithNorms(dot(col("e_q"), col("e_c")), col("n_q"), col("n_c"))
-            .as("cos")),
+          exactCos.as("cos")),
       k)
   }
 
@@ -3886,8 +3725,7 @@ object Similarity {
   private def semanticDedupWith(v: DataFrame, cents: Array[Array[Double]],
                                 tau: Double): DataFrame = {
     val assigned = v.select(
-      element_at(graft.functions.VectorQuantize.nearestCells(
-        col("embedding"), cents, 1), 1).as("cell"),
+      cellOf(cents),
       col("vec_id"), col("embedding"), col("nrm"))
     val a = assigned.select(col("cell"), col("vec_id").as("id_a"),
       col("embedding").as("e_a"), col("nrm").as("n_a"))
@@ -3966,8 +3804,7 @@ object Similarity {
                                                cents: Array[Array[Double]],
                                                tau: Double): DataFrame = {
     val assigned = corpus.select(
-      element_at(graft.functions.VectorQuantize.nearestCells(
-        col("embedding"), cents, 1), 1).as("cell"),
+      cellOf(cents),
       col("vec_id"), col("embedding").as("e_c"),
       l2norm(col("embedding")).as("n_c"))
     val hits = assigned
@@ -4091,35 +3928,28 @@ object Similarity {
     * the (cos DESC, id ASC) top-match replayed exactly. */
   def decontaminateSemanticOracle(nCells: Int = 16, nProbe: Int = 4,
                                   tau: Double = 0.4): String = {
-    val spark = SparkSession.getActiveSession.getOrElse(
-      graft.Tables.configure(SparkSession.builder().master("local[2]")
-        .config("spark.ui.enabled", "false")).getOrCreate())
-    val sfDir = sys.props.getOrElse("graft.oracle.sfdir",
-      "/root/testdata/sf0.01")
+    val (spark, sfDir) = Tables.oracleSession()
     val cents = trainCentroids(vectors(spark, sfDir), nCells)
-    val dot = (a: String, b: String) =>
-      s"""list_reduce(list_transform(list_zip($a, $b),
-          x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)), (p, q) -> p + q)"""
     val centRows = cents.zipWithIndex.map { case (c, i) =>
       s"(${i}, ${c.mkString("[", ", ", "]")})"
     }.mkString(", ")
     s"""WITH n AS (SELECT vec_id, embedding,
-          sqrt(${dot("embedding", "embedding")}) AS nrm FROM embeddings),
+          sqrt(${dotSql("embedding", "embedding")}) AS nrm FROM embeddings),
         cents(cell, cv) AS (VALUES $centRows),
         ranked AS (
           SELECT v.vec_id, v.embedding, v.nrm, c.cell,
             row_number() OVER (PARTITION BY v.vec_id ORDER BY
-              ${dot("v.embedding", "c.cv")} DESC, c.cell) AS crnk
+              ${dotSql("v.embedding", "c.cv")} DESC, c.cell) AS crnk
           FROM n v, cents c),
         corpus AS (SELECT vec_id, embedding, nrm, cell FROM ranked
                    WHERE crnk = 1 AND vec_id % 10 <> 0),
         probes AS (SELECT vec_id AS eval_id, embedding, nrm, cell
                    FROM ranked WHERE crnk <= $nProbe AND vec_id % 10 = 0),
         hits AS (SELECT c.vec_id, p.eval_id,
-                   ${dot("c.embedding", "p.embedding")} / (c.nrm * p.nrm)
+                   ${dotSql("c.embedding", "p.embedding")} / (c.nrm * p.nrm)
                      AS cos
                  FROM corpus c JOIN probes p ON p.cell = c.cell
-                 WHERE ${dot("c.embedding", "p.embedding")}
+                 WHERE ${dotSql("c.embedding", "p.embedding")}
                          / (c.nrm * p.nrm) >= $tau),
         verdicts AS (SELECT vec_id,
                        CAST(count(*) AS BIGINT) AS n_matches,
@@ -4136,30 +3966,23 @@ object Similarity {
   /** Oracle for [[semanticDedup]]: trained centroids inlined, ranked
     * assignment + within-cell pairwise replay. */
   def semanticDedupOracle(nCells: Int = 16, tau: Double = 0.4): String = {
-    val spark = SparkSession.getActiveSession.getOrElse(
-      graft.Tables.configure(SparkSession.builder().master("local[2]")
-        .config("spark.ui.enabled", "false")).getOrCreate())
-    val sfDir = sys.props.getOrElse("graft.oracle.sfdir",
-      "/root/testdata/sf0.01")
+    val (spark, sfDir) = Tables.oracleSession()
     val cents = trainCentroids(vectors(spark, sfDir), nCells)
-    val dot = (a: String, b: String) =>
-      s"""list_reduce(list_transform(list_zip($a, $b),
-          x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)), (p, q) -> p + q)"""
     val centRows = cents.zipWithIndex.map { case (c, i) =>
       s"(${i}, ${c.mkString("[", ", ", "]")})"
     }.mkString(", ")
     s"""WITH n AS (SELECT vec_id, embedding,
-          sqrt(${dot("embedding", "embedding")}) AS nrm FROM embeddings),
+          sqrt(${dotSql("embedding", "embedding")}) AS nrm FROM embeddings),
         cents(cell, cv) AS (VALUES $centRows),
         assigned AS (SELECT vec_id, embedding, nrm, cell FROM (
           SELECT v.vec_id, v.embedding, v.nrm, c.cell,
             row_number() OVER (PARTITION BY v.vec_id ORDER BY
-              ${dot("v.embedding", "c.cv")} DESC, c.cell) AS crnk
+              ${dotSql("v.embedding", "c.cv")} DESC, c.cell) AS crnk
           FROM n v, cents c) WHERE crnk = 1),
         dup AS (SELECT b.vec_id, min(a.vec_id) AS dup_of
                 FROM assigned a JOIN assigned b
                   ON a.cell = b.cell AND a.vec_id < b.vec_id
-                WHERE ${dot("a.embedding", "b.embedding")}
+                WHERE ${dotSql("a.embedding", "b.embedding")}
                         / (a.nrm * b.nrm) >= $tau
                 GROUP BY 1)
         SELECT s.vec_id, s.cell, dup.dup_of IS NOT NULL AS dropped,
@@ -4197,8 +4020,7 @@ object Similarity {
     val maxProbe = math.min(probeCounts.max, cents.length)
     val corpus = v.filter(col("vec_id") % 10 =!= 0)
       .select(
-        element_at(graft.functions.VectorQuantize.nearestCells(
-          col("embedding"), cents, 1), 1).as("cell"),
+        cellOf(cents),
         col("vec_id"), col("embedding"), col("nrm"))
     // eval sample: the smallest nEval held-out items (ids are dense
     // from 0, so vec_id < nEval*10 picks exactly nEval at any SF)
@@ -4247,16 +4069,9 @@ object Similarity {
                             probeCounts: Seq[Int] = Seq(1, 2, 4),
                             taus: Seq[Double] = Seq(0.3, 0.4),
                             nEval: Int = 50): String = {
-    val spark = SparkSession.getActiveSession.getOrElse(
-      graft.Tables.configure(SparkSession.builder().master("local[2]")
-        .config("spark.ui.enabled", "false")).getOrCreate())
-    val sfDir = sys.props.getOrElse("graft.oracle.sfdir",
-      "/root/testdata/sf0.01")
+    val (spark, sfDir) = Tables.oracleSession()
     val cents = trainCentroids(vectors(spark, sfDir), nCells)
     val maxProbe = math.min(probeCounts.max, cents.length)
-    val dot = (a: String, b: String) =>
-      s"""list_reduce(list_transform(list_zip($a, $b),
-          x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)), (p, q) -> p + q)"""
     val centRows = cents.zipWithIndex.map { case (c, i) =>
       s"(${i}, ${c.mkString("[", ", ", "]")})"
     }.mkString(", ")
@@ -4265,12 +4080,12 @@ object Similarity {
     val minTau = taus.min
     s"""WITH cents(cell, cv) AS (VALUES $centRows),
         nv AS (SELECT vec_id, embedding,
-                 sqrt(${dot("embedding", "embedding")}) AS nrm
+                 sqrt(${dotSql("embedding", "embedding")}) AS nrm
                FROM embeddings),
         ranked AS (
           SELECT v.vec_id, v.embedding, v.nrm, c.cell,
             row_number() OVER (PARTITION BY v.vec_id ORDER BY
-              ${dot("v.embedding", "c.cv")} DESC, c.cell) AS crnk
+              ${dotSql("v.embedding", "c.cv")} DESC, c.cell) AS crnk
           FROM nv v, cents c),
         corpus AS (SELECT vec_id, embedding, nrm, cell FROM ranked
                    WHERE crnk = 1 AND vec_id % 10 <> 0),
@@ -4282,16 +4097,16 @@ object Similarity {
                    FROM ranked WHERE crnk <= $maxProbe
                      AND vec_id % 10 = 0 AND vec_id < ${nEval * 10}),
         pairs AS (SELECT c.vec_id, p.probe_rank,
-                    ${dot("c.embedding", "p.embedding")} / (c.nrm * p.nrm)
+                    ${dotSql("c.embedding", "p.embedding")} / (c.nrm * p.nrm)
                       AS cos
                   FROM corpus c JOIN probes p ON p.cell = c.cell
-                  WHERE ${dot("c.embedding", "p.embedding")}
+                  WHERE ${dotSql("c.embedding", "p.embedding")}
                           / (c.nrm * p.nrm) >= $minTau),
         brute AS (SELECT c.vec_id,
-                    ${dot("c.embedding", "e.embedding")} / (c.nrm * e.nrm)
+                    ${dotSql("c.embedding", "e.embedding")} / (c.nrm * e.nrm)
                       AS cos
                   FROM corpus c, evals e
-                  WHERE ${dot("c.embedding", "e.embedding")}
+                  WHERE ${dotSql("c.embedding", "e.embedding")}
                           / (c.nrm * e.nrm) >= $minTau),
         grid(n_probe, tau) AS (VALUES $gridRows)
        SELECT g.n_probe, CAST(g.tau AS DOUBLE) AS tau,
@@ -4321,16 +4136,13 @@ object Similarity {
     * proven by the embedding_dedup oracle). This flips ann_lsh from a
     * weak rows-only check to a full value-hash oracle match. */
   def lshOracle(nQueries: Int = 10, k: Int = 5): String = {
-    val dot = (a: String, b: String) =>
-      s"""list_reduce(list_transform(list_zip($a, $b),
-          x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)), (p, q) -> p + q)"""
     val planes = hyperplanes(16, 64)
     val bitExprs = planes.map { p =>
       val lit = p.mkString("[", ", ", "]")
-      s"CASE WHEN ${dot("embedding", lit)} > 0 THEN '1' ELSE '0' END"
+      s"CASE WHEN ${dotSql("embedding", lit)} > 0 THEN '1' ELSE '0' END"
     }.mkString("concat(", ", ", ")")
     s"""WITH n AS (SELECT vec_id, embedding,
-          sqrt(${dot("embedding", "embedding")}) AS nrm FROM embeddings),
+          sqrt(${dotSql("embedding", "embedding")}) AS nrm FROM embeddings),
         bits AS (SELECT vec_id, embedding, nrm, $bitExprs AS bits FROM n),
         banded AS (
           SELECT vec_id, b.b || ':' || substring(bits, b.b * 2 + 1, 2)
@@ -4342,9 +4154,9 @@ object Similarity {
           WHERE q.vec_id < $nQueries AND q.vec_id <> c.vec_id)
         SELECT query_id, neighbor_id, rnk, round(cos, 6) AS cos6 FROM (
           SELECT p.query_id, p.neighbor_id,
-            ${dot("qv.embedding", "cv.embedding")} / (qv.nrm * cv.nrm) AS cos,
+            ${dotSql("qv.embedding", "cv.embedding")} / (qv.nrm * cv.nrm) AS cos,
             CAST(row_number() OVER (PARTITION BY p.query_id ORDER BY
-              ${dot("qv.embedding", "cv.embedding")} / (qv.nrm * cv.nrm) DESC,
+              ${dotSql("qv.embedding", "cv.embedding")} / (qv.nrm * cv.nrm) DESC,
               p.neighbor_id) AS INTEGER) AS rnk
           FROM pair_ids p
           JOIN bits qv ON qv.vec_id = p.query_id
@@ -4369,30 +4181,23 @@ object Similarity {
     * data-dependent model. */
   def ivfTrainedOracle(nCells: Int = 16, nProbe: Int = 4, nQueries: Int = 10,
                        k: Int = 5): String = {
-    val spark = SparkSession.getActiveSession.getOrElse(
-      graft.Tables.configure(SparkSession.builder().master("local[2]")
-        .config("spark.ui.enabled", "false")).getOrCreate())
-    val sfDir = sys.props.getOrElse("graft.oracle.sfdir",
-      "/root/testdata/sf0.01")
+    val (spark, sfDir) = Tables.oracleSession()
     ivfOracleFor(trainCentroids(vectors(spark, sfDir), nCells),
       nProbe, nQueries, k)
   }
 
   private def ivfOracleFor(cents: Array[Array[Double]], nProbe: Int,
                            nQueries: Int, k: Int): String = {
-    val dot = (a: String, b: String) =>
-      s"""list_reduce(list_transform(list_zip($a, $b),
-          x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)), (p, q) -> p + q)"""
     val centRows = cents.zipWithIndex.map { case (c, i) =>
       s"(${i}, ${c.mkString("[", ", ", "]")})"
     }.mkString(", ")
     s"""WITH n AS (SELECT vec_id, embedding,
-          sqrt(${dot("embedding", "embedding")}) AS nrm FROM embeddings),
+          sqrt(${dotSql("embedding", "embedding")}) AS nrm FROM embeddings),
         cents(cell, cv) AS (VALUES $centRows),
         ranked AS (
           SELECT v.vec_id, v.embedding, v.nrm, c.cell,
             row_number() OVER (PARTITION BY v.vec_id ORDER BY
-              ${dot("v.embedding", "c.cv")} DESC, c.cell) AS crnk
+              ${dotSql("v.embedding", "c.cv")} DESC, c.cell) AS crnk
           FROM n v, cents c),
         assigned AS (SELECT cell, vec_id AS neighbor_id, embedding AS e_c,
                        nrm AS n_c FROM ranked WHERE crnk = 1),
@@ -4401,9 +4206,9 @@ object Similarity {
                    FROM ranked WHERE crnk <= $nProbe AND vec_id < $nQueries)
         SELECT query_id, neighbor_id, rnk, round(cos, 6) AS cos6 FROM (
           SELECT p.query_id, a.neighbor_id,
-            ${dot("p.e_q", "a.e_c")} / (p.n_q * a.n_c) AS cos,
+            ${dotSql("p.e_q", "a.e_c")} / (p.n_q * a.n_c) AS cos,
             CAST(row_number() OVER (PARTITION BY p.query_id ORDER BY
-              ${dot("p.e_q", "a.e_c")} / (p.n_q * a.n_c) DESC,
+              ${dotSql("p.e_q", "a.e_c")} / (p.n_q * a.n_c) DESC,
               a.neighbor_id) AS INTEGER) AS rnk
           FROM probes p JOIN assigned a ON p.cell = a.cell
           WHERE p.query_id <> a.neighbor_id)
@@ -4430,6 +4235,13 @@ object Similarity {
       .mkString("[", ", ", "]")).mkString("[", ", ", "]")
     (rows, lit)
   }
+
+  /** The DuckDB dot-product fragment every oracle builder shares: a
+    * left fold of per-element double products, the engine dot's order
+    * and casts, so replayed scores are bit-identical. */
+  private[graft] def dotSql(a: String, b: String): String =
+    s"""list_reduce(list_transform(list_zip($a, $b),
+        x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)), (p, q) -> p + q)"""
 
   /** The sq8 dequantized-corpus CTE body — embedding_quantize's exact
     * per-element max-abs formula, defined ONCE and shared by every
@@ -4545,84 +4357,25 @@ object Similarity {
     * shortlist sweep (which ranks it ONCE at the largest factor and
     * reads smaller factors as prefixes). */
   private def pqAdcScored(v: DataFrame, cbs: Array[Array[Array[Double]]],
-                          nQueries: Int): DataFrame = {
-    val nSub = cbs.length
-    val sub = cbs.head.head.length
-    val codeCols = (0 until nSub).map { m =>
-      element_at(graft.functions.VectorQuantize.nearestCellsBiased(
-        expr(s"slice(embedding, ${m * sub + 1}, $sub)"), cbs(m),
-        l2Biases(cbs(m)), 1), 1)
-        .as(s"c$m")
-    }
-    val coded = v.select(col("vec_id").as("neighbor_id") +: codeCols: _*)
-    // ADC: fixed left-to-right sub-space sum — the oracle adds in the
-    // same order, so the double is bit-identical
-    val score = (0 until nSub).map { m =>
-      graft.functions.VectorFunctions.dot(
-        expr(s"slice(e_q, ${m * sub + 1}, $sub)"),
-        element_at(typedLit(cbs(m).map(_.toSeq).toSeq), col(s"c$m") + 1))
-    }.reduceLeft(_ + _)
-    coded
-      .join(broadcast(v.filter(col("vec_id") < nQueries)
-          .select(col("vec_id").as("query_id"),
-            col("embedding").as("e_q"))),
-        col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"), score.as("score"))
-  }
+                          nQueries: Int): DataFrame =
+    candidates(
+      v.select(col("vec_id").as("neighbor_id") +: pqCodeCols(cbs, "embedding"): _*),
+      v.filter(col("vec_id") < nQueries)
+        .select(col("vec_id").as("query_id"), col("embedding").as("e_q")),
+      adcScore(cbs, "e_q"), "score")
 
+  // stage 1 — ADC shortlist over the CODES table (compressed scan);
+  // stage 2 — exact re-rank of the gathered shortlist
   private def annPqWith(v: DataFrame, cbs: Array[Array[Array[Double]]],
-                        nQueries: Int, k: Int,
-                        shortlistFactor: Int = 8): DataFrame =
-    // stage 1 — ADC shortlist over the CODES table (compressed scan);
-    // stage 2 — exact re-rank of the gathered shortlist
-    pqExactRerank(
-      pqShortlistOf(pqAdcScored(v, cbs, nQueries), shortlistFactor * k),
-      v, nQueries, k)
-
-  /** Bounded top-`shortlist` per query over an ADC-scored pair frame —
-    * stage 1's ranking, shared by the raw and OPQ pipelines. */
-  private def pqShortlistOf(scored: DataFrame, shortlist: Int): DataFrame =
-    scored
-      .groupBy("query_id")
-      .agg(graft.functions.TopKByScoreAgg.topkByScore(
-        col("neighbor_id"), col("score"), shortlist).as("top"))
-      .select(col("query_id"), explode(col("top.neighbor_id"))
-        .as("neighbor_id"))
-
-  /** Stage 2 — EXACT re-rank: gather only the shortlisted vectors by
-    * id (an equi-join, R×Q rows) from `v` and rank by true cosine in
-    * `v`'s space. Shared by the raw and OPQ pipelines (the OPQ
-    * shortlist is ranked in rotated space, the re-rank here stays in
-    * the ORIGINAL space — rotation preserves cosine, and ranking on
-    * the raw embeddings keeps the output directly comparable). */
-  private def pqExactRerank(short: DataFrame, v: DataFrame,
-                            nQueries: Int, k: Int): DataFrame = {
-    val queries = v.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"), col("embedding").as("e_q"),
-        col("nrm").as("n_q"))
-    short
-      .join(v.select(col("vec_id").as("neighbor_id"),
-        col("embedding").as("e_c"), col("nrm").as("n_c")), Seq("neighbor_id"))
-      .join(broadcast(queries), Seq("query_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        cosineWithNorms(dot(col("e_q"), col("e_c")), col("n_q"), col("n_c"))
-          .as("cos"))
-      .groupBy("query_id")
-      .agg(graft.functions.TopKByScoreAgg.topkByScore(
-        col("neighbor_id"), col("cos"), k).as("top"))
-      .select(col("query_id"), posexplode(col("top")).as(Seq("pos", "e")))
-      .select(col("query_id"), col("e.neighbor_id").as("neighbor_id"),
-        (col("pos") + 1).cast("int").as("rnk"),
-        round(col("e.cos"), 6).as("cos6"))
-      .orderBy("query_id", "rnk")
-  }
+                        nQueries: Int, k: Int): DataFrame =
+    shortlistRerank(pqAdcScored(v, cbs, nQueries), v, nQueries, k)
 
   /** §2 #234 — SQ8 ANN (scalar-quantized flat scan, the FAISS
     * `SQfp8`/`QT_8bit` serving mode): stage 1 scores EVERY candidate by
     * `cos(q, dequant_i8(x))` — the asymmetric distance over
     * [[graft.functions.Sq8Dequant]]'s int8 storage leg that #120 (embedding_quantize)
     * writes and #121 (quantize_eval) prices — and stage 2 exact-reranks
-    * the bounded shortlist ([[pqExactRerank]], shared with the PQ
+    * the bounded shortlist ([[shortlistRerank]], shared with the PQ
     * family). The compression rung BETWEEN raw floats and PQ: 4× smaller
     * scan than float32 (1 byte/dim + one scale per vector) with far less
     * distortion than 8×4-bit PQ, no training, no codebook lifecycle —
@@ -4645,22 +4398,9 @@ object Similarity {
 
   private[graft] def annSq8With(v: DataFrame, nQueries: Int, k: Int,
                                 shortlistFactor: Int = 8): DataFrame = {
-    // dequantize ONCE PER CANDIDATE (map-only), then the broadcast-
-    // query scan scores with the codegen'd dot — re-quantizing inside
-    // the pair join would multiply the quantization work by nQueries
-    val dq = v.select(col("vec_id").as("neighbor_id"),
-        graft.functions.Sq8Dequant.dequant(col("embedding")).as("d"))
-      .withColumn("n_d", l2norm(col("d")))
-    val scored = dq
-      .join(broadcast(v.filter(col("vec_id") < nQueries)
-          .select(col("vec_id").as("query_id"),
-            col("embedding").as("e_q"), col("nrm").as("n_q"))),
-        col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        cosineWithNorms(dot(col("e_q"), col("d")), col("n_q"), col("n_d"))
-          .as("score"))
-    pqExactRerank(pqShortlistOf(scored, shortlistFactor * k),
-      v, nQueries, k)
+    val queries = queryVecs(v.filter(col("vec_id") < nQueries))
+    exactRerank(sq8Shortlist(candVecs(v), queries, shortlistFactor * k),
+      candVecs(v), queries, k)
   }
 
   /** DuckDB replay for [[annSq8]] — static SQL: per-element max-abs
@@ -4669,28 +4409,25 @@ object Similarity {
     * shortlist-then-exact-re-rank tail as [[pqOracleFor]]. */
   def sq8Oracle(nQueries: Int = 10, k: Int = 5,
                 shortlistFactor: Int = 8): String = {
-    val dot = (a: String, b: String) =>
-      s"""list_reduce(list_transform(list_zip($a, $b),
-          x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)), (p, q) -> p + q)"""
     s"""WITH nv AS (SELECT vec_id, embedding,
-                 sqrt(${dot("embedding", "embedding")}) AS nrm
+                 sqrt(${dotSql("embedding", "embedding")}) AS nrm
                FROM embeddings),
         dq AS (${sq8DequantCteBody}),
         short AS (SELECT query_id, neighbor_id FROM (
             SELECT q.vec_id AS query_id, n.vec_id AS neighbor_id,
               row_number() OVER (PARTITION BY q.vec_id ORDER BY
-                (${dot("q.embedding", "n.d")}
-                   / (sqrt(${dot("q.embedding", "q.embedding")})
-                      * sqrt(${dot("n.d", "n.d")}))) DESC,
+                (${dotSql("q.embedding", "n.d")}
+                   / (sqrt(${dotSql("q.embedding", "q.embedding")})
+                      * sqrt(${dotSql("n.d", "n.d")}))) DESC,
                 n.vec_id) AS r
             FROM embeddings q JOIN dq n ON n.vec_id <> q.vec_id
             WHERE q.vec_id < $nQueries)
           WHERE r <= ${shortlistFactor * k})
         SELECT query_id, neighbor_id, rnk, round(cos, 6) AS cos6 FROM (
           SELECT s.query_id, s.neighbor_id,
-            ${dot("qv.embedding", "cv.embedding")} / (qv.nrm * cv.nrm) AS cos,
+            ${dotSql("qv.embedding", "cv.embedding")} / (qv.nrm * cv.nrm) AS cos,
             CAST(row_number() OVER (PARTITION BY s.query_id ORDER BY
-              ${dot("qv.embedding", "cv.embedding")} / (qv.nrm * cv.nrm) DESC,
+              ${dotSql("qv.embedding", "cv.embedding")} / (qv.nrm * cv.nrm) DESC,
               s.neighbor_id) AS INTEGER) AS rnk
           FROM short s
           JOIN nv qv ON qv.vec_id = s.query_id
@@ -4727,43 +4464,11 @@ object Similarity {
                                    cents: Array[Array[Double]],
                                    nProbe: Int, nQueries: Int, k: Int,
                                    shortlistFactor: Int = 8): DataFrame = {
-    val shortlist = shortlistFactor * k
-    def cellsOf(n: Int) =
-      graft.functions.VectorQuantize.nearestCells(col("embedding"), cents, n)
-    // one map-only pass: coarse cell + the dequantized serving vector
-    val cand = v.select(element_at(cellsOf(1), 1).as("cell"),
-      col("vec_id").as("neighbor_id"),
-      graft.functions.Sq8Dequant.dequant(col("embedding")).as("d"))
-      .withColumn("n_d", l2norm(col("d")))
-    val queries = v.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"), col("embedding").as("e_q"),
-        col("nrm").as("n_q"))
-    val probes = v.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"), col("embedding").as("e_q"),
-        col("nrm").as("n_q"), explode(cellsOf(nProbe)).as("cell"))
-    // stage 1 — sq8 shortlist over the PROBED CELLS only
-    val short = cand
-      .join(broadcast(probes), Seq("cell"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        cosineWithNorms(dot(col("e_q"), col("d")), col("n_q"), col("n_d"))
-          .as("score"))
-      .groupBy("query_id")
-      .agg(graft.functions.TopKByScoreAgg.topkByScore(
-        col("neighbor_id"), col("score"), shortlist).as("top"))
-      .select(col("query_id"), explode(col("top.neighbor_id"))
-        .as("neighbor_id"))
-    // stage 2 — exact re-rank of the shortlist by true cosine
-    rankTopK(
-      short
-        .join(v.select(col("vec_id").as("neighbor_id"),
-          col("embedding").as("e_c"), col("nrm").as("n_c")),
-          Seq("neighbor_id"))
-        .join(broadcast(queries), Seq("query_id"))
-        .select(col("query_id"), col("neighbor_id"),
-          cosineWithNorms(dot(col("e_q"), col("e_c")), col("n_q"), col("n_c"))
-            .as("cos")),
-      k)
+    val qs = v.filter(col("vec_id") < nQueries)
+    // stage 1 — sq8 shortlist over the PROBED CELLS only; stage 2 —
+    // exact re-rank of the shortlist by true cosine
+    exactRerank(sq8Shortlist(ivfLists(v, cents), probeFrame(qs, cents, nProbe),
+      shortlistFactor * k), candVecs(v), queryVecs(qs), k)
   }
 
   /** DuckDB replay for [[annIvfSq8]]: trained centroids inlined (the
@@ -4773,11 +4478,7 @@ object Similarity {
   def ivfSq8TrainedOracle(nCells: Int = 16, nProbe: Int = 4,
                           nQueries: Int = 10, k: Int = 5,
                           shortlistFactor: Int = 8): String = {
-    val spark = SparkSession.getActiveSession.getOrElse(
-      graft.Tables.configure(SparkSession.builder().master("local[2]")
-        .config("spark.ui.enabled", "false")).getOrCreate())
-    val sfDir = sys.props.getOrElse("graft.oracle.sfdir",
-      "/root/testdata/sf0.01")
+    val (spark, sfDir) = Tables.oracleSession()
     val v = vectors(spark, sfDir)
     val cents = withTrainCache(v)(trainCentroids(_, nCells))
     ivfSq8OracleFor(cents, nProbe, nQueries, k, shortlistFactor)
@@ -4789,20 +4490,17 @@ object Similarity {
   private def ivfSq8OracleFor(cents: Array[Array[Double]],
                               nProbe: Int, nQueries: Int, k: Int,
                               shortlistFactor: Int): String = {
-    val dot = (a: String, b: String) =>
-      s"""list_reduce(list_transform(list_zip($a, $b),
-          x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)), (p, q) -> p + q)"""
     val centRows = cents.zipWithIndex.map { case (c, i) =>
       s"(${i}, ${c.mkString("[", ", ", "]")})"
     }.mkString(", ")
     s"""WITH cents(cell, cv) AS (VALUES $centRows),
         nv AS (SELECT vec_id, embedding,
-                 sqrt(${dot("embedding", "embedding")}) AS nrm
+                 sqrt(${dotSql("embedding", "embedding")}) AS nrm
                FROM embeddings),
         ranked AS (
           SELECT v.vec_id, v.embedding, v.nrm, c.cell,
             row_number() OVER (PARTITION BY v.vec_id ORDER BY
-              ${dot("v.embedding", "c.cv")} DESC, c.cell) AS crnk
+              ${dotSql("v.embedding", "c.cv")} DESC, c.cell) AS crnk
           FROM nv v, cents c),
         dq AS (${sq8DequantCteBody}),
         acand AS (SELECT a.cell, d.vec_id, d.d FROM dq d
@@ -4813,18 +4511,18 @@ object Similarity {
         short AS (SELECT query_id, neighbor_id FROM (
             SELECT p.query_id, n.vec_id AS neighbor_id,
               row_number() OVER (PARTITION BY p.query_id ORDER BY
-                (${dot("p.e_q", "n.d")}
-                   / (sqrt(${dot("p.e_q", "p.e_q")})
-                      * sqrt(${dot("n.d", "n.d")}))) DESC,
+                (${dotSql("p.e_q", "n.d")}
+                   / (sqrt(${dotSql("p.e_q", "p.e_q")})
+                      * sqrt(${dotSql("n.d", "n.d")}))) DESC,
                 n.vec_id) AS r
             FROM probes p, acand n
             WHERE n.cell = p.cell AND n.vec_id <> p.query_id)
           WHERE r <= ${shortlistFactor * k})
         SELECT query_id, neighbor_id, rnk, round(cos, 6) AS cos6 FROM (
           SELECT s.query_id, s.neighbor_id,
-            ${dot("qv.embedding", "cv.embedding")} / (qv.nrm * cv.nrm) AS cos,
+            ${dotSql("qv.embedding", "cv.embedding")} / (qv.nrm * cv.nrm) AS cos,
             CAST(row_number() OVER (PARTITION BY s.query_id ORDER BY
-              ${dot("qv.embedding", "cv.embedding")} / (qv.nrm * cv.nrm) DESC,
+              ${dotSql("qv.embedding", "cv.embedding")} / (qv.nrm * cv.nrm) DESC,
               s.neighbor_id) AS INTEGER) AS rnk
           FROM short s
           JOIN nv qv ON qv.vec_id = s.query_id
@@ -4850,9 +4548,7 @@ object Similarity {
   def annIvfPq(spark: SparkSession, sfDir: String, nCells: Int = 16,
                nProbe: Int = 4, nQueries: Int = 10, k: Int = 5): DataFrame = {
     val v = vectors(spark, sfDir)
-    val (cents, cbs) =
-      withTrainCache(v)(vc => (trainCentroids(vc, nCells),
-        trainPqCodebooks(vc)))
+    val (cents, cbs) = ivfPqModels(v, nCells)
     annIvfPqWith(v, cents, cbs, nProbe, nQueries, k)
   }
 
@@ -4860,52 +4556,15 @@ object Similarity {
                            cbs: Array[Array[Array[Double]]],
                            nProbe: Int, nQueries: Int, k: Int,
                            shortlistFactor: Int = 8): DataFrame = {
-    val nSub = cbs.length
-    val sub = cbs.head.head.length
-    val shortlist = shortlistFactor * k
-    def cellsOf(n: Int) =
-      graft.functions.VectorQuantize.nearestCells(col("embedding"), cents, n)
-    val codeCols = (0 until nSub).map { m =>
-      element_at(graft.functions.VectorQuantize.nearestCellsBiased(
-        expr(s"slice(embedding, ${m * sub + 1}, $sub)"), cbs(m),
-        l2Biases(cbs(m)), 1), 1)
-        .as(s"c$m")
-    }
     // one map-only pass builds the whole index row: coarse cell + codes
-    val coded = v.select(element_at(cellsOf(1), 1).as("cell") +:
-      col("vec_id").as("neighbor_id") +: codeCols: _*)
-    val queries = v.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"), col("embedding").as("e_q"),
-        col("nrm").as("n_q"))
-    val probes = v.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"), col("embedding").as("e_q"),
-        explode(cellsOf(nProbe)).as("cell"))
-    val score = (0 until nSub).map { m =>
-      graft.functions.VectorFunctions.dot(
-        expr(s"slice(e_q, ${m * sub + 1}, $sub)"),
-        element_at(typedLit(cbs(m).map(_.toSeq).toSeq), col(s"c$m") + 1))
-    }.reduceLeft(_ + _)
-    // stage 1 — ADC shortlist over the codes of PROBED CELLS only
-    val short = coded
-      .join(broadcast(probes.select("cell", "query_id", "e_q")), Seq("cell"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"), score.as("score"))
-      .groupBy("query_id")
-      .agg(graft.functions.TopKByScoreAgg.topkByScore(
-        col("neighbor_id"), col("score"), shortlist).as("top"))
-      .select(col("query_id"), explode(col("top.neighbor_id"))
-        .as("neighbor_id"))
+    val coded = v.select(cellOf(cents) +: col("vec_id").as("neighbor_id") +:
+      pqCodeCols(cbs, "embedding"): _*)
+    val probes = probeFrame(v.filter(col("vec_id") < nQueries), cents, nProbe)
+      .select("cell", "query_id", "e_q")
+    // stage 1 — ADC shortlist over the codes of PROBED CELLS only;
     // stage 2 — exact re-rank of the shortlist by true cosine
-    rankTopK(
-      short
-        .join(v.select(col("vec_id").as("neighbor_id"),
-          col("embedding").as("e_c"), col("nrm").as("n_c")),
-          Seq("neighbor_id"))
-        .join(broadcast(queries), Seq("query_id"))
-        .select(col("query_id"), col("neighbor_id"),
-          cosineWithNorms(dot(col("e_q"), col("e_c")), col("n_q"), col("n_c"))
-            .as("cos")),
-      k)
+    shortlistRerank(candidates(coded, probes, adcScore(cbs, "e_q"), "score"),
+      v, nQueries, k, shortlistFactor)
   }
 
   /** Inline IVF×OPQ serving: [[annIvfPqWith]] with the PQ stage in
@@ -4921,54 +4580,15 @@ object Similarity {
                               cbs: Array[Array[Array[Double]]],
                               nProbe: Int, nQueries: Int, k: Int,
                               shortlistFactor: Int = 8): DataFrame = {
-    val nSub = cbs.length
-    val sub = cbs.head.head.length
-    val shortlist = shortlistFactor * k
-    def cellsOf(n: Int) =
-      graft.functions.VectorQuantize.nearestCells(col("embedding"), cents, n)
-    val codeCols = (0 until nSub).map { m =>
-      element_at(graft.functions.VectorQuantize.nearestCellsBiased(
-        expr(s"slice(re, ${m * sub + 1}, $sub)"), cbs(m),
-        l2Biases(cbs(m)), 1), 1)
-        .as(s"c$m")
-    }
     // one map-only pass: coarse cell (original space) + rotated codes
     val coded = v
-      .select(element_at(cellsOf(1), 1).as("cell"),
-        col("vec_id").as("neighbor_id"),
+      .select(cellOf(cents), col("vec_id").as("neighbor_id"),
         rotCol(r, col("embedding")).as("re"))
-      .select(col("cell") +: col("neighbor_id") +: codeCols: _*)
-    val queries = v.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"), col("embedding").as("e_q"),
-        col("nrm").as("n_q"))
-    val probes = v.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"),
-        rotCol(r, col("embedding")).as("e_s"),
-        explode(cellsOf(nProbe)).as("cell"))
-    val score = (0 until nSub).map { m =>
-      graft.functions.VectorFunctions.dot(
-        expr(s"slice(e_s, ${m * sub + 1}, $sub)"),
-        element_at(typedLit(cbs(m).map(_.toSeq).toSeq), col(s"c$m") + 1))
-    }.reduceLeft(_ + _)
-    val short = coded
-      .join(broadcast(probes.select("cell", "query_id", "e_s")), Seq("cell"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"), score.as("score"))
-      .groupBy("query_id")
-      .agg(graft.functions.TopKByScoreAgg.topkByScore(
-        col("neighbor_id"), col("score"), shortlist).as("top"))
-      .select(col("query_id"), explode(col("top.neighbor_id"))
-        .as("neighbor_id"))
-    rankTopK(
-      short
-        .join(v.select(col("vec_id").as("neighbor_id"),
-          col("embedding").as("e_c"), col("nrm").as("n_c")),
-          Seq("neighbor_id"))
-        .join(broadcast(queries), Seq("query_id"))
-        .select(col("query_id"), col("neighbor_id"),
-          cosineWithNorms(dot(col("e_q"), col("e_c")), col("n_q"), col("n_c"))
-            .as("cos")),
-      k)
+      .select(col("cell") +: col("neighbor_id") +: pqCodeCols(cbs, "re"): _*)
+    val probes = probeFrame(v.filter(col("vec_id") < nQueries), cents, nProbe)
+      .select(col("cell"), col("query_id"), rotCol(r, col("e_q")).as("e_s"))
+    shortlistRerank(candidates(coded, probes, adcScore(cbs, "e_s"), "score"),
+      v, nQueries, k, shortlistFactor)
   }
 
   /** §2 #241 — OPQ IVFADC serving FROM THE ARTIFACT: the
@@ -4990,15 +4610,9 @@ object Similarity {
       val (r, cb) = trainOpqRotation(vc)
       (c, r, cb)
     }
-    val dir = ExportImport.scratch(
-      s"ivfpq-index/run-${java.util.UUID.randomUUID()}")
-    ivfIndexBuild(spark, v.select("vec_id", "embedding"), dir, cents)
-    ivfPqIndexAdd(spark, dir, Some(cbsO), rotation = Some(rO))
-    annServeFromPqIndex(spark, dir,
-      Tables.load(spark, sfDir, "embeddings")
-        .filter(col("vec_id") < nQueries)
-        .select(col("vec_id"), col("embedding")),
-      nProbe, k)
+    serveFreshIndex(spark, sfDir, "ivfpq-index", nQueries)(
+      ivfPqArtifact(spark, v, cents, cbsO, rotation = Some(rO)))(
+      annServeFromPqIndex(spark, _, _, nProbe, k))
   }
 
   /** (vec_id, cell, res) for every corpus vector: its coarse cell and
@@ -5013,8 +4627,7 @@ object Similarity {
                                cents: Array[Array[Double]]): DataFrame = {
     val centArr = typedLit(cents.map(_.toSeq).toSeq)
     v.select(col("vec_id"), col("embedding"),
-        element_at(graft.functions.VectorQuantize.nearestCells(
-          col("embedding"), cents, 1), 1).as("cell"))
+        cellOf(cents))
       .withColumn("res",
         zip_with(col("embedding"), element_at(centArr, col("cell") + 1),
           (x, c) => x.cast("double") - c))
@@ -5044,14 +4657,7 @@ object Similarity {
                        nProbe: Int = 4, nQueries: Int = 10,
                        k: Int = 5): DataFrame = {
     val v = vectors(spark, sfDir)
-    val (cents, cbs) = withTrainCache(v) { vc =>
-      val cents = trainCentroids(vc, nCells)
-      // codebooks train on the residual frame — [[trainPqCodebooks]]
-      // is dimension- and type-agnostic (array<double> residuals)
-      (cents, trainPqCodebooks(
-        residualAssigned(vc, cents).select(col("vec_id"),
-          col("res").as("embedding"))))
-    }
+    val (cents, cbs) = residualModels(v, nCells)
     annIvfPqResidualWith(v, cents, cbs, nProbe, nQueries, k)
   }
 
@@ -5061,57 +4667,17 @@ object Similarity {
                                           nProbe: Int, nQueries: Int, k: Int,
                                           shortlistFactor: Int = 8)
       : DataFrame = {
-    val nSub = cbs.length
-    val sub = cbs.head.head.length
-    val shortlist = shortlistFactor * k
-    val centArr = typedLit(cents.map(_.toSeq).toSeq)
-    val codeCols = (0 until nSub).map { m =>
-      element_at(graft.functions.VectorQuantize.nearestCellsBiased(
-        expr(s"slice(res, ${m * sub + 1}, $sub)"), cbs(m),
-        l2Biases(cbs(m)), 1), 1)
-        .as(s"c$m")
-    }
     // one map-only pass: coarse cell + double residual + residual codes
     val coded = residualAssigned(v, cents)
-      .select(col("cell") +: col("vec_id").as("neighbor_id") +: codeCols: _*)
-    val queries = v.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"), col("embedding").as("e_q"),
-        col("nrm").as("n_q"))
-    val probes = v.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"), col("embedding").as("e_q"),
-        explode(graft.functions.VectorQuantize.nearestCells(
-          col("embedding"), cents, nProbe)).as("cell"))
-    // ADC = dot(q, cell centroid) + per-sub-space codeword dots, summed
-    // LEFT TO RIGHT starting at the centroid term — the oracle adds in
-    // the same order, so the double is bit-identical
-    val centDot = graft.functions.VectorFunctions.dot(
-      col("e_q"), element_at(centArr, col("cell") + 1))
-    val score = (centDot +: (0 until nSub).map { m =>
-      graft.functions.VectorFunctions.dot(
-        expr(s"slice(e_q, ${m * sub + 1}, $sub)"),
-        element_at(typedLit(cbs(m).map(_.toSeq).toSeq), col(s"c$m") + 1))
-    }).reduceLeft(_ + _)
-    // stage 1 — ADC shortlist over the residual codes of PROBED CELLS
-    val short = coded
-      .join(broadcast(probes.select("cell", "query_id", "e_q")), Seq("cell"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"), score.as("score"))
-      .groupBy("query_id")
-      .agg(graft.functions.TopKByScoreAgg.topkByScore(
-        col("neighbor_id"), col("score"), shortlist).as("top"))
-      .select(col("query_id"), explode(col("top.neighbor_id"))
-        .as("neighbor_id"))
-    // stage 2 — exact re-rank of the shortlist by true cosine
-    rankTopK(
-      short
-        .join(v.select(col("vec_id").as("neighbor_id"),
-          col("embedding").as("e_c"), col("nrm").as("n_c")),
-          Seq("neighbor_id"))
-        .join(broadcast(queries), Seq("query_id"))
-        .select(col("query_id"), col("neighbor_id"),
-          cosineWithNorms(dot(col("e_q"), col("e_c")), col("n_q"), col("n_c"))
-            .as("cos")),
-      k)
+      .select(col("cell") +: col("vec_id").as("neighbor_id") +:
+        pqCodeCols(cbs, "res"): _*)
+    val probes = probeFrame(v.filter(col("vec_id") < nQueries), cents, nProbe)
+      .select("cell", "query_id", "e_q")
+    // stage 1 — centroid-plus-codeword ADC shortlist over the residual
+    // codes of PROBED CELLS; stage 2 — exact re-rank by true cosine
+    shortlistRerank(
+      candidates(coded, probes, adcScore(cbs, "e_q", Some(cents)), "score"),
+      v, nQueries, k, shortlistFactor)
   }
 
   /** Oracle for [[annIvfPqResidual]]: both trained models inlined (the
@@ -5120,18 +4686,9 @@ object Similarity {
     * ADC, shortlist, and re-rank replayed exactly. */
   def ivfPqResidualTrainedOracle(nCells: Int = 16, nProbe: Int = 4,
                                  nQueries: Int = 10, k: Int = 5): String = {
-    val spark = SparkSession.getActiveSession.getOrElse(
-      graft.Tables.configure(SparkSession.builder().master("local[2]")
-        .config("spark.ui.enabled", "false")).getOrCreate())
-    val sfDir = sys.props.getOrElse("graft.oracle.sfdir",
-      "/root/testdata/sf0.01")
+    val (spark, sfDir) = Tables.oracleSession()
     val v = vectors(spark, sfDir)
-    val (cents, cbs) = withTrainCache(v) { vc =>
-      val cents = trainCentroids(vc, nCells)
-      (cents, trainPqCodebooks(
-        residualAssigned(vc, cents).select(col("vec_id"),
-          col("res").as("embedding"))))
-    }
+    val (cents, cbs) = residualModels(v, nCells)
     ivfPqResidualOracleFor(cents, cbs, nProbe, nQueries, k)
   }
 
@@ -5141,9 +4698,6 @@ object Similarity {
                                      k: Int): String = {
     val nSub = cbs.length
     val sub = cbs.head.head.length
-    val dot = (a: String, b: String) =>
-      s"""list_reduce(list_transform(list_zip($a, $b),
-          x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)), (p, q) -> p + q)"""
     val centRows = cents.zipWithIndex.map { case (c, i) =>
       s"(${i}, ${c.mkString("[", ", ", "]")})"
     }.mkString(", ")
@@ -5157,10 +4711,10 @@ object Similarity {
       .map(m => s"max(CASE WHEN m = $m THEN kk END) AS c$m").mkString(", ")
     // centroid term FIRST, then sub-spaces left to right — the engine's
     // reduceLeft order
-    val adc = (s"${dot("p.e_q", "ct.cv")}" +: (0 until nSub).map { m =>
+    val adc = (s"${dotSql("p.e_q", "ct.cv")}" +: (0 until nSub).map { m =>
       val lo = m * sub + 1
       val hi = (m + 1) * sub
-      s"${dot(s"p.e_q[$lo:$hi]", s"cbl.cb[${m + 1}][n.c$m + 1]")}"
+      s"${dotSql(s"p.e_q[$lo:$hi]", s"cbl.cb[${m + 1}][n.c$m + 1]")}"
     }).mkString(" + ")
     val cbLit = cbs.map(_.map(_.mkString("[", ", ", "]"))
       .mkString("[", ", ", "]")).mkString("[", ", ", "]")
@@ -5168,12 +4722,12 @@ object Similarity {
         cb(m, kk, cv, bias) AS (VALUES $cbRows),
         cbl AS (SELECT $cbLit AS cb),
         nv AS (SELECT vec_id, embedding,
-                 sqrt(${dot("embedding", "embedding")}) AS nrm
+                 sqrt(${dotSql("embedding", "embedding")}) AS nrm
                FROM embeddings),
         ranked AS (
           SELECT v.vec_id, v.embedding, v.nrm, c.cell,
             row_number() OVER (PARTITION BY v.vec_id ORDER BY
-              ${dot("v.embedding", "c.cv")} DESC, c.cell) AS crnk
+              ${dotSql("v.embedding", "c.cv")} DESC, c.cell) AS crnk
           FROM nv v, cents c),
         resid AS (SELECT r.vec_id, r.cell,
             list_transform(list_zip(r.embedding, c.cv),
@@ -5187,7 +4741,7 @@ object Similarity {
         coded AS (SELECT vec_id, m, kk FROM (
                     SELECT sub.vec_id, sub.m, cb.kk,
                       row_number() OVER (PARTITION BY sub.vec_id, sub.m
-                        ORDER BY (${dot("sub.s", "cb.cv")} + cb.bias) DESC,
+                        ORDER BY (${dotSql("sub.s", "cb.cv")} + cb.bias) DESC,
                           cb.kk) AS r
                     FROM sub JOIN cb ON cb.m = sub.m)
                   WHERE r = 1),
@@ -5207,9 +4761,9 @@ object Similarity {
           WHERE r <= ${8 * k})
         SELECT query_id, neighbor_id, rnk, round(cos, 6) AS cos6 FROM (
           SELECT s.query_id, s.neighbor_id,
-            ${dot("qv.embedding", "cv.embedding")} / (qv.nrm * cv.nrm) AS cos,
+            ${dotSql("qv.embedding", "cv.embedding")} / (qv.nrm * cv.nrm) AS cos,
             CAST(row_number() OVER (PARTITION BY s.query_id ORDER BY
-              ${dot("qv.embedding", "cv.embedding")} / (qv.nrm * cv.nrm) DESC,
+              ${dotSql("qv.embedding", "cv.embedding")} / (qv.nrm * cv.nrm) DESC,
               s.neighbor_id) AS INTEGER) AS rnk
           FROM short s
           JOIN nv qv ON qv.vec_id = s.query_id
@@ -5397,19 +4951,11 @@ object Similarity {
       rot.map(r => e.select(col("cell"), col("vec_id"),
         rotCol(r, col("embedding")).as("embedding"))).getOrElse(e)
     }
-    val nSub = cbs.length
-    val sub = cbs.head.head.length
-    val codeCols = (0 until nSub).map { m =>
-      element_at(graft.functions.VectorQuantize.nearestCellsBiased(
-        expr(s"slice(enc, ${m * sub + 1}, $sub)"), cbs(m),
-        l2Biases(cbs(m)), 1), 1)
-        .as(s"c$m")
-    }
     // residual codes read from the residual frame under the SAME
     // column name the raw path reads, so one codeCols expression
     // serves both encodings
     encodeSpace(base).withColumnRenamed("embedding", "enc")
-      .select(col("cell") +: col("vec_id") +: codeCols: _*)
+      .select(col("cell") +: col("vec_id") +: pqCodeCols(cbs, "enc"): _*)
       .write.mode("overwrite").partitionBy("cell")
       .parquet(s"$dir/codes")
     // the codebook UNIT (codebooks + baseline + mode marker) is
@@ -5578,16 +5124,7 @@ object Similarity {
                           shortlistFactor: Int = 0): DataFrame = {
     val (cand, q, all) = pqAdcCandidates(spark, dir, queries, nProbe, k,
       shortlistFactor)
-    rankTopK(
-      cand
-        .join(all.select(col("vec_id").as("neighbor_id"),
-          col("embedding").as("e_c"), col("nrm").as("n_c")),
-          Seq("neighbor_id"))
-        .join(broadcast(q), Seq("query_id"))
-        .select(col("query_id"), col("neighbor_id"),
-          cosineWithNorms(dot(col("e_q"), col("e_c")), col("n_q"),
-            col("n_c")).as("cos")),
-      k)
+    exactRerank(cand, candVecs(all), q, k)
   }
 
   /** The PQ leg's CANDIDATE machinery, shared by the top-k serve
@@ -5642,8 +5179,6 @@ object Similarity {
     val rot: Option[Array[Array[Double]]] =
       if (readPqRotationMode(spark, dir)) Some(readPqRotation(spark, dir))
       else None
-    val nSub = cbs.length
-    val sub = cbs.head.head.length
     // mode-aware default: residual ADC holds raw-f=8 recall at f=4
     // (pqShortlistSweepResidual), so the residual leg's default
     // gathers half the candidates for the same answer quality
@@ -5651,33 +5186,18 @@ object Similarity {
                      else if (residualMode) 4 else 8) * k
     val q = queries.select(col("vec_id").as("query_id"),
       col("embedding").as("e_q"), l2norm(col("embedding")).as("n_q"))
+    // the probe keys on the normed query frame `q` the exact stage also
+    // reads, and rotates each query once before the cell fan-out
     val probes = q
       .withColumn("e_s",
         rot.map(r => rotCol(r, col("e_q"))).getOrElse(col("e_q")))
       .select(col("query_id"), col("e_q"), col("e_s"),
         explode(graft.functions.VectorQuantize.nearestCells(
           col("e_q"), cents, nProbe)).as("cell"))
-    val subDots = (0 until nSub).map { m =>
-      graft.functions.VectorFunctions.dot(
-        expr(s"slice(e_s, ${m * sub + 1}, $sub)"),
-        element_at(typedLit(cbs(m).map(_.toSeq).toSeq), col(s"c$m") + 1))
-    }
-    val score =
-      (if (residualMode)
-         graft.functions.VectorFunctions.dot(col("e_q"),
-           element_at(typedLit(cents.map(_.toSeq).toSeq),
-             col("cell") + 1)) +: subDots
-       else subDots).reduceLeft(_ + _)
-    val short = spark.read.parquet(s"$dir/codes")
-      .withColumnRenamed("vec_id", "neighbor_id")
-      .join(broadcast(probes), Seq("cell"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"), score.as("score"))
-      .groupBy("query_id")
-      .agg(graft.functions.TopKByScoreAgg.topkByScore(
-        col("neighbor_id"), col("score"), shortlist).as("top"))
-      .select(col("query_id"), explode(col("top.neighbor_id"))
-        .as("neighbor_id"))
+    val short = shortlistOf(candidates(
+      spark.read.parquet(s"$dir/codes").withColumnRenamed("vec_id", "neighbor_id"),
+      probes, adcScore(cbs, "e_s", if (residualMode) Some(cents) else None),
+      "score"), shortlist)
     // fresh path: live deltas in probed cells go straight to the exact
     // stage (codes cover the base only, so the two legs are disjoint)
     val all = readIvfAssignedWithBatchId(spark, dir)
@@ -5714,22 +5234,9 @@ object Similarity {
         s"pre=$preFactor")
     val (cand, q, all) = pqAdcCandidates(spark, dir, queryFrame, nProbe,
       k, preFactor * shortlistFactor)
-    val cEmb = all.select(col("vec_id").as("cand_id"),
-      col("embedding").as("e_c"), col("nrm").as("n_c"))
-    val short = cand
-      .select(col("query_id"), col("neighbor_id").as("cand_id"))
-      .join(cEmb, Seq("cand_id"))
-      .join(broadcast(q), Seq("query_id"))
-      .select(col("query_id"), col("cand_id"),
-        cosineWithNorms(dot(col("e_q"), col("e_c")), col("n_q"),
-          col("n_c")).as("cosq"))
-      .groupBy("query_id")
-      .agg(graft.functions.TopKByScoreAgg.topkByScore(
-        col("cand_id"), col("cosq"), shortlistFactor * k).as("top"))
-      .select(col("query_id"), explode(col("top")).as("e"))
-      .select(col("query_id"), col("e.neighbor_id").as("cand_id"),
-        col("e.cos").as("cosq"))
-    mmrRerank(short, cEmb, k, lambda)
+    val cands = candVecs(all)
+    mmrRerank(rankTopKFull(exactScored(cand, cands, q), shortlistFactor * k),
+      cands, k, lambda)
   }
 
   /** §2 #254 — MMR OVER THE ADC SCAN, FROM THE ARTIFACT: train both
@@ -5744,18 +5251,10 @@ object Similarity {
                       shortlistFactor: Int = 8, lambda: Double = 0.7,
                       preFactor: Int = 2): DataFrame = {
     val v = vectors(spark, sfDir)
-    val (cents, cbs) =
-      withTrainCache(v)(vc => (trainCentroids(vc, 16),
-        trainPqCodebooks(vc)))
-    val dir = ExportImport.scratch(
-      s"ivfpq-index/run-${java.util.UUID.randomUUID()}")
-    ivfIndexBuild(spark, v.select("vec_id", "embedding"), dir, cents)
-    ivfPqIndexAdd(spark, dir, Some(cbs))
-    annMmrPqFromIndex(spark, dir,
-      Tables.load(spark, sfDir, "embeddings")
-        .filter(col("vec_id") < nQueries)
-        .select(col("vec_id"), col("embedding")),
-      nProbe, k, shortlistFactor, lambda, preFactor)
+    val (cents, cbs) = ivfPqModels(v, 16)
+    serveFreshIndex(spark, sfDir, "ivfpq-index", nQueries)(
+      ivfPqArtifact(spark, v, cents, cbs))(annMmrPqFromIndex(spark, _, _,
+      nProbe, k, shortlistFactor, lambda, preFactor))
   }
 
   /** §2 #222 — IVFADC serving FROM THE ARTIFACT: train both models
@@ -5768,20 +5267,10 @@ object Similarity {
   def annIvfPqIndexed(spark: SparkSession, sfDir: String, nProbe: Int = 4,
                       nQueries: Int = 10, k: Int = 5): DataFrame = {
     val v = vectors(spark, sfDir)
-    val (cents, cbs) =
-      withTrainCache(v)(vc => (trainCentroids(vc, 16),
-        trainPqCodebooks(vc)))
-    // per-run UUID subdir: concurrent runs must not overwrite each
-    // other's artifact mid-read (the annIvfIndexed stance)
-    val dir = ExportImport.scratch(
-      s"ivfpq-index/run-${java.util.UUID.randomUUID()}")
-    ivfIndexBuild(spark, v.select("vec_id", "embedding"), dir, cents)
-    ivfPqIndexAdd(spark, dir, Some(cbs))
-    annServeFromPqIndex(spark, dir,
-      Tables.load(spark, sfDir, "embeddings")
-        .filter(col("vec_id") < nQueries)
-        .select(col("vec_id"), col("embedding")),
-      nProbe, k)
+    val (cents, cbs) = ivfPqModels(v, 16)
+    serveFreshIndex(spark, sfDir, "ivfpq-index", nQueries)(
+      ivfPqArtifact(spark, v, cents, cbs))(
+      annServeFromPqIndex(spark, _, _, nProbe, k))
   }
 
   /** §2 #228 — RESIDUAL IVFADC serving FROM THE ARTIFACT: the
@@ -5798,25 +5287,14 @@ object Similarity {
                               nProbe: Int = 4, nQueries: Int = 10,
                               k: Int = 5): DataFrame = {
     val v = vectors(spark, sfDir)
-    val (cents, cbsR) = withTrainCache(v) { vc =>
-      val cents = trainCentroids(vc, 16)
-      (cents, trainPqCodebooks(
-        residualAssigned(vc, cents).select(col("vec_id"),
-          col("res").as("embedding"))))
-    }
-    val dir = ExportImport.scratch(
-      s"ivfpq-index/run-${java.util.UUID.randomUUID()}")
-    ivfIndexBuild(spark, v.select("vec_id", "embedding"), dir, cents)
-    ivfPqIndexAdd(spark, dir, Some(cbsR), residual = Some(true))
+    val (cents, cbsR) = residualModels(v, 16)
     // factor pinned to the inline pipeline's 8: this query PROVES
     // artifact serving ≡ the inline residual pipeline at the same
     // operating point (shared oracle). The mode-aware serving default
     // (residual → 4) is spec-pinned separately in SimilaritySpec.
-    annServeFromPqIndex(spark, dir,
-      Tables.load(spark, sfDir, "embeddings")
-        .filter(col("vec_id") < nQueries)
-        .select(col("vec_id"), col("embedding")),
-      nProbe, k, shortlistFactor = 8)
+    serveFreshIndex(spark, sfDir, "ivfpq-index", nQueries)(
+      ivfPqArtifact(spark, v, cents, cbsR, residual = Some(true)))(
+      annServeFromPqIndex(spark, _, _, nProbe, k, shortlistFactor = 8))
   }
 
   /** Oracle for [[annIvfPq]]: both trained models inlined (the
@@ -5824,11 +5302,7 @@ object Similarity {
     * encoding, ADC, shortlist, and re-rank replayed exactly. */
   def ivfPqTrainedOracle(nCells: Int = 16, nProbe: Int = 4,
                          nQueries: Int = 10, k: Int = 5): String = {
-    val spark = SparkSession.getActiveSession.getOrElse(
-      graft.Tables.configure(SparkSession.builder().master("local[2]")
-        .config("spark.ui.enabled", "false")).getOrCreate())
-    val sfDir = sys.props.getOrElse("graft.oracle.sfdir",
-      "/root/testdata/sf0.01")
+    val (spark, sfDir) = Tables.oracleSession()
     val v = vectors(spark, sfDir)
     ivfPqOracleFor(trainCentroids(v, nCells), trainPqCodebooks(v),
       nProbe, nQueries, k)
@@ -5839,11 +5313,7 @@ object Similarity {
     * corpus, ADC off the rotated query, exact re-rank unchanged. */
   def ivfPqOpqTrainedOracle(nCells: Int = 16, nProbe: Int = 4,
                             nQueries: Int = 10, k: Int = 5): String = {
-    val spark = SparkSession.getActiveSession.getOrElse(
-      graft.Tables.configure(SparkSession.builder().master("local[2]")
-        .config("spark.ui.enabled", "false")).getOrCreate())
-    val sfDir = sys.props.getOrElse("graft.oracle.sfdir",
-      "/root/testdata/sf0.01")
+    val (spark, sfDir) = Tables.oracleSession()
     val v = vectors(spark, sfDir)
     val (cents, rO, cbsO) = withTrainCache(v) { vc =>
       val c = trainCentroids(vc, nCells)
@@ -5860,9 +5330,6 @@ object Similarity {
       : String = {
     val nSub = cbs.length
     val sub = cbs.head.head.length
-    val dot = (a: String, b: String) =>
-      s"""list_reduce(list_transform(list_zip($a, $b),
-          x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)), (p, q) -> p + q)"""
     val centRows = cents.zipWithIndex.map { case (c, i) =>
       s"(${i}, ${c.mkString("[", ", ", "]")})"
     }.mkString(", ")
@@ -5879,7 +5346,7 @@ object Similarity {
     val adc = (0 until nSub).map { m =>
       val lo = m * sub + 1
       val hi = (m + 1) * sub
-      s"${dot(s"p.e_s[$lo:$hi]", s"cbl.cb[${m + 1}][n.c$m + 1]")}"
+      s"${dotSql(s"p.e_s[$lo:$hi]", s"cbl.cb[${m + 1}][n.c$m + 1]")}"
     }.mkString(" + ")
     val cbLit = cbs.map(_.map(_.mkString("[", ", ", "]"))
       .mkString("[", ", ", "]")).mkString("[", ", ", "]")
@@ -5900,12 +5367,12 @@ object Similarity {
         cb(m, kk, cv, bias) AS (VALUES $cbRows),
         cbl AS (SELECT $cbLit AS cb),
         ${rotCtes}nv AS (SELECT vec_id, embedding,
-                 sqrt(${dot("embedding", "embedding")}) AS nrm
+                 sqrt(${dotSql("embedding", "embedding")}) AS nrm
                FROM embeddings),
         ranked AS (
           SELECT v.vec_id, v.embedding, v.nrm, c.cell,
             row_number() OVER (PARTITION BY v.vec_id ORDER BY
-              ${dot("v.embedding", "c.cv")} DESC, c.cell) AS crnk
+              ${dotSql("v.embedding", "c.cv")} DESC, c.cell) AS crnk
           FROM nv v, cents c),
         sub AS (SELECT vec_id, mm.m AS m,
                   embedding[mm.m * $sub + 1 : (mm.m + 1) * $sub] AS s
@@ -5914,7 +5381,7 @@ object Similarity {
         coded AS (SELECT vec_id, m, kk FROM (
                     SELECT sub.vec_id, sub.m, cb.kk,
                       row_number() OVER (PARTITION BY sub.vec_id, sub.m
-                        ORDER BY (${dot("sub.s", "cb.cv")} + cb.bias) DESC,
+                        ORDER BY (${dotSql("sub.s", "cb.cv")} + cb.bias) DESC,
                           cb.kk) AS r
                     FROM sub JOIN cb ON cb.m = sub.m)
                   WHERE r = 1),
@@ -5932,9 +5399,9 @@ object Similarity {
           WHERE r <= ${8 * k})
         SELECT query_id, neighbor_id, rnk, round(cos, 6) AS cos6 FROM (
           SELECT s.query_id, s.neighbor_id,
-            ${dot("qv.embedding", "cv.embedding")} / (qv.nrm * cv.nrm) AS cos,
+            ${dotSql("qv.embedding", "cv.embedding")} / (qv.nrm * cv.nrm) AS cos,
             CAST(row_number() OVER (PARTITION BY s.query_id ORDER BY
-              ${dot("qv.embedding", "cv.embedding")} / (qv.nrm * cv.nrm) DESC,
+              ${dotSql("qv.embedding", "cv.embedding")} / (qv.nrm * cv.nrm) DESC,
               s.neighbor_id) AS INTEGER) AS rnk
           FROM short s
           JOIN nv qv ON qv.vec_id = s.query_id
@@ -5948,11 +5415,7 @@ object Similarity {
     * determinism property spec; encode, ADC, and rank are replayed
     * EXACTLY downstream of the model). */
   def pqTrainedOracle(nQueries: Int = 10, k: Int = 5): String = {
-    val spark = SparkSession.getActiveSession.getOrElse(
-      graft.Tables.configure(SparkSession.builder().master("local[2]")
-        .config("spark.ui.enabled", "false")).getOrCreate())
-    val sfDir = sys.props.getOrElse("graft.oracle.sfdir",
-      "/root/testdata/sf0.01")
+    val (spark, sfDir) = Tables.oracleSession()
     pqOracleFor(trainPqCodebooks(vectors(spark, sfDir)), nQueries, k)
   }
 
@@ -5964,9 +5427,6 @@ object Similarity {
                           nQueries: Int, k: Int): String = {
     val nSub = cbs.length
     val sub = cbs.head.head.length
-    val dot = (a: String, b: String) =>
-      s"""list_reduce(list_transform(list_zip($a, $b),
-          x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)), (p, q) -> p + q)"""
     // bias inlined as the SAME Scala-computed double the kernel adds,
     // so `dot + bias` is bit-identical in both engines
     val cbRows = (for {
@@ -5980,7 +5440,7 @@ object Similarity {
     val adc = (0 until nSub).map { m =>
       val lo = m * sub + 1
       val hi = (m + 1) * sub
-      s"${dot(s"q.embedding[$lo:$hi]", s"cbl.cb[${m + 1}][n.c$m + 1]")}"
+      s"${dotSql(s"q.embedding[$lo:$hi]", s"cbl.cb[${m + 1}][n.c$m + 1]")}"
     }.mkString(" + ")
     val cbLit = cbs.map(_.map(_.mkString("[", ", ", "]"))
       .mkString("[", ", ", "]")).mkString("[", ", ", "]")
@@ -5993,13 +5453,13 @@ object Similarity {
         coded AS (SELECT vec_id, m, kk FROM (
                     SELECT sub.vec_id, sub.m, cb.kk,
                       row_number() OVER (PARTITION BY sub.vec_id, sub.m
-                        ORDER BY (${dot("sub.s", "cb.cv")} + cb.bias) DESC,
+                        ORDER BY (${dotSql("sub.s", "cb.cv")} + cb.bias) DESC,
                           cb.kk) AS r
                     FROM sub JOIN cb ON cb.m = sub.m)
                   WHERE r = 1),
         codes AS (SELECT vec_id, $codePivot FROM coded GROUP BY 1),
         nv AS (SELECT vec_id, embedding,
-                 sqrt(${dot("embedding", "embedding")}) AS nrm
+                 sqrt(${dotSql("embedding", "embedding")}) AS nrm
                FROM embeddings),
         short AS (SELECT query_id, neighbor_id FROM (
             SELECT q.vec_id AS query_id, n.vec_id AS neighbor_id,
@@ -6010,9 +5470,9 @@ object Similarity {
           WHERE r <= ${8 * k})
         SELECT query_id, neighbor_id, rnk, round(cos, 6) AS cos6 FROM (
           SELECT s.query_id, s.neighbor_id,
-            ${dot("qv.embedding", "cv.embedding")} / (qv.nrm * cv.nrm) AS cos,
+            ${dotSql("qv.embedding", "cv.embedding")} / (qv.nrm * cv.nrm) AS cos,
             CAST(row_number() OVER (PARTITION BY s.query_id ORDER BY
-              ${dot("qv.embedding", "cv.embedding")} / (qv.nrm * cv.nrm) DESC,
+              ${dotSql("qv.embedding", "cv.embedding")} / (qv.nrm * cv.nrm) DESC,
               s.neighbor_id) AS INTEGER) AS rnk
           FROM short s
           JOIN nv qv ON qv.vec_id = s.query_id
@@ -6060,11 +5520,7 @@ object Similarity {
       val coded = v
         .select(col("embedding").cast("array<double>").as("x"),
           rotCol.as("re"))
-        .select(col("x") +: (0 until m).map { mi =>
-          element_at(graft.functions.VectorQuantize.nearestCellsBiased(
-            expr(s"slice(re, ${mi * sub + 1}, $sub)"), cbs(mi),
-            l2Biases(cbs(mi)), 1), 1).as(s"c$mi")
-        }: _*)
+        .select(col("x") +: pqCodeCols(cbs, "re"): _*)
       val xy = coded.select(col("x"),
         flatten(array((0 until m).map(mi =>
           element_at(typedLit(cbs(mi).map(_.toSeq).toSeq),
@@ -6122,10 +5578,8 @@ object Similarity {
                            cbs: Array[Array[Array[Double]]],
                            nQueries: Int, k: Int,
                            shortlistFactor: Int = 8): DataFrame =
-    pqExactRerank(
-      pqShortlistOf(pqAdcScored(rotatedFrame(v, r), cbs, nQueries),
-        shortlistFactor * k),
-      v, nQueries, k)
+    shortlistRerank(pqAdcScored(rotatedFrame(v, r), cbs, nQueries), v,
+      nQueries, k, shortlistFactor)
 
   /** DuckDB oracle for [[annPqOpq]]: the trained rotation AND
     * codebooks inlined; the rotation replayed as one dot per output
@@ -6134,11 +5588,7 @@ object Similarity {
     * the rotated frame with the exact re-rank on the ORIGINAL
     * embeddings. */
   def opqTrainedOracle(nQueries: Int = 10, k: Int = 5): String = {
-    val spark = SparkSession.getActiveSession.getOrElse(
-      graft.Tables.configure(SparkSession.builder().master("local[2]")
-        .config("spark.ui.enabled", "false")).getOrCreate())
-    val sfDir = sys.props.getOrElse("graft.oracle.sfdir",
-      "/root/testdata/sf0.01")
+    val (spark, sfDir) = Tables.oracleSession()
     val (r, cbs) = withTrainCache(vectors(spark, sfDir))(
       trainOpqRotation(_))
     opqOracleFor(r, cbs, nQueries, k)
@@ -6146,15 +5596,12 @@ object Similarity {
 
   private[graft] def opqRotCte(r: Array[Array[Double]],
                                src: String = "embeddings"): String = {
-    val dot = (a: String, b: String) =>
-      s"""list_reduce(list_transform(list_zip($a, $b),
-          x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)), (p, q) -> p + q)"""
     val rRows = r.zipWithIndex.map { case (row, j) =>
       s"($j, ${row.mkString("[", ", ", "]")})"
     }.mkString(", ")
     s"""rr(j, rv) AS (VALUES $rRows),
         rot AS (SELECT vec_id, list(rd ORDER BY j) AS embedding FROM (
-            SELECT e.vec_id, r.j, ${dot("e.embedding", "r.rv")} AS rd
+            SELECT e.vec_id, r.j, ${dotSql("e.embedding", "r.rv")} AS rd
             FROM $src e, rr r) GROUP BY vec_id)"""
   }
 
@@ -6163,9 +5610,6 @@ object Similarity {
                            nQueries: Int, k: Int): String = {
     val nSub = cbs.length
     val sub = cbs.head.head.length
-    val dot = (a: String, b: String) =>
-      s"""list_reduce(list_transform(list_zip($a, $b),
-          x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)), (p, q) -> p + q)"""
     val cbRows = (for {
       m <- 0 until nSub
       kk <- cbs(m).indices
@@ -6177,7 +5621,7 @@ object Similarity {
     val adc = (0 until nSub).map { m =>
       val lo = m * sub + 1
       val hi = (m + 1) * sub
-      s"${dot(s"q.embedding[$lo:$hi]", s"cbl.cb[${m + 1}][n.c$m + 1]")}"
+      s"${dotSql(s"q.embedding[$lo:$hi]", s"cbl.cb[${m + 1}][n.c$m + 1]")}"
     }.mkString(" + ")
     val cbLit = cbs.map(_.map(_.mkString("[", ", ", "]"))
       .mkString("[", ", ", "]")).mkString("[", ", ", "]")
@@ -6191,13 +5635,13 @@ object Similarity {
         coded AS (SELECT vec_id, m, kk FROM (
                     SELECT sub.vec_id, sub.m, cb.kk,
                       row_number() OVER (PARTITION BY sub.vec_id, sub.m
-                        ORDER BY (${dot("sub.s", "cb.cv")} + cb.bias) DESC,
+                        ORDER BY (${dotSql("sub.s", "cb.cv")} + cb.bias) DESC,
                           cb.kk) AS r
                     FROM sub JOIN cb ON cb.m = sub.m)
                   WHERE r = 1),
         codes AS (SELECT vec_id, $codePivot FROM coded GROUP BY 1),
         nv AS (SELECT vec_id, embedding,
-                 sqrt(${dot("embedding", "embedding")}) AS nrm
+                 sqrt(${dotSql("embedding", "embedding")}) AS nrm
                FROM embeddings),
         short AS (SELECT query_id, neighbor_id FROM (
             SELECT q.vec_id AS query_id, n.vec_id AS neighbor_id,
@@ -6208,9 +5652,9 @@ object Similarity {
           WHERE r <= ${8 * k})
         SELECT query_id, neighbor_id, rnk, round(cos, 6) AS cos6 FROM (
           SELECT s.query_id, s.neighbor_id,
-            ${dot("qv.embedding", "cv.embedding")} / (qv.nrm * cv.nrm) AS cos,
+            ${dotSql("qv.embedding", "cv.embedding")} / (qv.nrm * cv.nrm) AS cos,
             CAST(row_number() OVER (PARTITION BY s.query_id ORDER BY
-              ${dot("qv.embedding", "cv.embedding")} / (qv.nrm * cv.nrm) DESC,
+              ${dotSql("qv.embedding", "cv.embedding")} / (qv.nrm * cv.nrm) DESC,
               s.neighbor_id) AS INTEGER) AS rnk
           FROM short s
           JOIN nv qv ON qv.vec_id = s.query_id
@@ -6263,8 +5707,7 @@ object Similarity {
         .join(broadcast(qv), Seq("query_id"))
         .join(cv, Seq("neighbor_id"))
         .select(col("query_id"), col("neighbor_id"),
-          cosineWithNorms(dot(col("e_q"), col("e_c")), col("n_q"), col("n_c"))
-            .as("cos")),
+          exactCos.as("cos")),
       k)
   }
 
@@ -6318,8 +5761,7 @@ object Similarity {
       topM.join(broadcast(qv), Seq("query_id"))
         .join(cv, Seq("neighbor_id"))
         .select(col("query_id"), col("neighbor_id"),
-          cosineWithNorms(dot(col("e_q"), col("e_c")), col("n_q"),
-            col("n_c")).as("cos")),
+          exactCos.as("cos")),
       k)
   }
 
@@ -6328,11 +5770,8 @@ object Similarity {
     * TopKByScore order), and the cosine rerank all replay in SQL. */
   def signSketchOracle(nQueries: Int = 10, m: Int = 50,
                        k: Int = 5): String = {
-    val dot = (a: String, b: String) =>
-      s"""list_reduce(list_transform(list_zip($a, $b),
-          x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)), (p, q) -> p + q)"""
     s"""WITH n AS (SELECT vec_id, embedding,
-          sqrt(${dot("embedding", "embedding")}) AS nrm FROM embeddings),
+          sqrt(${dotSql("embedding", "embedding")}) AS nrm FROM embeddings),
         b AS (SELECT vec_id, embedding, nrm,
           CAST(list_sum([CASE WHEN embedding[i + 1] > 0
                               THEN (CAST(1 AS BIGINT) << i) ELSE 0 END
@@ -6348,9 +5787,9 @@ object Similarity {
           WHERE rm <= $m)
         SELECT query_id, neighbor_id, rnk, round(cos, 6) AS cos6 FROM (
           SELECT t.query_id, t.neighbor_id,
-            ${dot("qv.embedding", "cv.embedding")} / (qv.nrm * cv.nrm) AS cos,
+            ${dotSql("qv.embedding", "cv.embedding")} / (qv.nrm * cv.nrm) AS cos,
             CAST(row_number() OVER (PARTITION BY t.query_id ORDER BY
-              ${dot("qv.embedding", "cv.embedding")} / (qv.nrm * cv.nrm) DESC,
+              ${dotSql("qv.embedding", "cv.embedding")} / (qv.nrm * cv.nrm) DESC,
               t.neighbor_id) AS INTEGER) AS rnk
           FROM topm t
           JOIN b qv ON qv.vec_id = t.query_id
@@ -6750,30 +6189,23 @@ object Similarity {
     * trained literals, the projection and every decimal sum replayed
     * with identical arithmetic. */
   def embeddingWhitenOracle(iters: Int = 5): String = {
-    val spark = SparkSession.getActiveSession.getOrElse(
-      graft.Tables.configure(SparkSession.builder().master("local[2]")
-        .config("spark.ui.enabled", "false")).getOrCreate())
-    val sfDir = sys.props.getOrElse("graft.oracle.sfdir",
-      "/root/testdata/sf0.01")
+    val (spark, sfDir) = Tables.oracleSession()
     val (mu, pc) = trainPc1(
       graft.Tables.load(spark, sfDir, "embeddings").select(col("embedding")),
       iters)
     val muL = mu.mkString("[", ", ", "]")
     val pcL = pc.mkString("[", ", ", "]")
     val pcN = math.sqrt(pc.map(x => x * x).sum)
-    val dotQ = (a: String, b: String) =>
-      s"""list_reduce(list_transform(list_zip($a, $b),
-          x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)), (p, q) -> p + q)"""
     s"""WITH diff AS (SELECT list_transform(list_zip(embedding, $muL),
             x -> CAST(x[1] AS DOUBLE) - CAST(x[2] AS DOUBLE)) AS diff
           FROM embeddings),
-        sc AS (SELECT diff, ${dotQ("diff", pcL)} AS s FROM diff),
+        sc AS (SELECT diff, ${dotSql("diff", pcL)} AS s FROM diff),
         ww AS (SELECT diff, s,
             list_transform(list_zip(diff, $pcL),
               x -> CAST(x[1] AS DOUBLE) - s * CAST(x[2] AS DOUBLE)) AS w
           FROM sc),
-        m AS (SELECT s, ${dotQ("w", pcL)} AS s2,
-            ${dotQ("diff", "diff")} AS nd2, ${dotQ("w", "w")} AS nw2
+        m AS (SELECT s, ${dotSql("w", pcL)} AS s2,
+            ${dotSql("diff", "diff")} AS nd2, ${dotSql("w", "w")} AS nw2
           FROM ww),
         cc AS (SELECT s, s2, nd2, nw2,
             CASE WHEN nd2 > 0 THEN abs(s) / (sqrt(nd2) * $pcN)
@@ -6851,15 +6283,7 @@ object Similarity {
       .asInstanceOf[(Array[Array[Double]], Array[Array[Array[Double]]])]
     val wq = w.filter(col("vec_id") < nQueries)
     val key = Seq("query_id", "neighbor_id")
-    val truth = rankTopK(
-      w.select(col("vec_id").as("neighbor_id"),
-          col("embedding").as("e_c"), col("nrm").as("n_c"))
-        .join(broadcast(wq.select(col("vec_id").as("query_id"),
-          col("embedding").as("e_q"), col("nrm").as("n_q"))),
-          col("query_id") =!= col("neighbor_id"))
-        .select(col("query_id"), col("neighbor_id"),
-          cosineWithNorms(dot(col("e_q"), col("e_c")), col("n_q"),
-            col("n_c")).as("cos")), k)
+    val truth = rankTopK(candidates(candVecs(w), queryVecs(wq), exactCos), k)
       .select(key.head, key.tail: _*)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     TransientCaches.register(truth)
@@ -6888,11 +6312,7 @@ object Similarity {
     * argmax assignment, sq8 clamp/round, rotated encode, ADC
     * shortlist, exact whitened-space rerank — replayed off it. */
   def whitenRecallEvalOracle(nQueries: Int = 10, k: Int = 5): String = {
-    val spark = SparkSession.getActiveSession.getOrElse(
-      graft.Tables.configure(SparkSession.builder().master("local[2]")
-        .config("spark.ui.enabled", "false")).getOrCreate())
-    val sfDir = sys.props.getOrElse("graft.oracle.sfdir",
-      "/root/testdata/sf0.01")
+    val (spark, sfDir) = Tables.oracleSession()
     val vRaw = vectors(spark, sfDir)
     val (mu, pc) = trainWhitening(vRaw)
     val w = whitenVectors(vRaw.select(col("vec_id"), col("embedding")),
@@ -6905,9 +6325,6 @@ object Similarity {
         val (r, cb) = trainOpqRotation(w)
         (c, r, cb)
       } finally w.unpersist(blocking = false)
-    val dot = (a: String, b: String) =>
-      s"""list_reduce(list_transform(list_zip($a, $b),
-          x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)), (p, q) -> p + q)"""
     val muL = mu.mkString("[", ", ", "]")
     val pcL = pc.mkString("[", ", ", "]")
     val centRows = centsW.zipWithIndex.map { case (c, i) =>
@@ -6921,7 +6338,7 @@ object Similarity {
     val adc = (0 until nSub).map { m =>
       val lo = m * sub + 1
       val hi = (m + 1) * sub
-      s"${dot(s"q.embedding[$lo:$hi]", s"cbl.cb[${m + 1}][n.c$m + 1]")}"
+      s"${dotSql(s"q.embedding[$lo:$hi]", s"cbl.cb[${m + 1}][n.c$m + 1]")}"
     }.mkString(" + ")
     def hit(shortCte: String) =
       s"""(SELECT CAST(count(*) AS BIGINT)
@@ -6932,7 +6349,7 @@ object Similarity {
       s"""$outCte AS (SELECT query_id, neighbor_id FROM (
             SELECT s.query_id, s.neighbor_id,
               row_number() OVER (PARTITION BY s.query_id ORDER BY
-                ${dot("qv.embedding", "cv.embedding")}
+                ${dotSql("qv.embedding", "cv.embedding")}
                   / (qv.nrm * cv.nrm) DESC, s.neighbor_id) AS rnk
             FROM $preCte s
             JOIN nw qv ON qv.vec_id = s.query_id
@@ -6946,17 +6363,17 @@ object Similarity {
             list_transform(list_zip(diff, $pcL),
               x -> CAST(x[1] AS DOUBLE) - s * CAST(x[2] AS DOUBLE))
               AS embedding
-          FROM (SELECT vec_id, diff, ${dot("diff", pcL)} AS s FROM wd)),
+          FROM (SELECT vec_id, diff, ${dotSql("diff", pcL)} AS s FROM wd)),
         nw AS (SELECT vec_id, embedding,
-                 sqrt(${dot("embedding", "embedding")}) AS nrm
+                 sqrt(${dotSql("embedding", "embedding")}) AS nrm
                FROM wemb),
         nv AS (SELECT vec_id, embedding,
-                 sqrt(${dot("embedding", "embedding")}) AS nrm
+                 sqrt(${dotSql("embedding", "embedding")}) AS nrm
                FROM embeddings),
         truthw AS (SELECT query_id, neighbor_id FROM (
             SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
               row_number() OVER (PARTITION BY q.vec_id ORDER BY
-                ${dot("q.embedding", "c.embedding")} / (q.nrm * c.nrm)
+                ${dotSql("q.embedding", "c.embedding")} / (q.nrm * c.nrm)
                   DESC, c.vec_id) AS rnk
             FROM nw q JOIN nw c ON c.vec_id <> q.vec_id
             WHERE q.vec_id < $nQueries)
@@ -6964,7 +6381,7 @@ object Similarity {
         bruteraw AS (SELECT query_id, neighbor_id FROM (
             SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
               row_number() OVER (PARTITION BY q.vec_id ORDER BY
-                ${dot("q.embedding", "c.embedding")} / (q.nrm * c.nrm)
+                ${dotSql("q.embedding", "c.embedding")} / (q.nrm * c.nrm)
                   DESC, c.vec_id) AS rnk
             FROM nv q JOIN nv c ON c.vec_id <> q.vec_id
             WHERE q.vec_id < $nQueries)
@@ -6973,7 +6390,7 @@ object Similarity {
         rankedw AS (
           SELECT v.vec_id, v.embedding, v.nrm, c.cell,
             row_number() OVER (PARTITION BY v.vec_id ORDER BY
-              ${dot("v.embedding", "c.cv")} DESC, c.cell) AS crnk
+              ${dotSql("v.embedding", "c.cv")} DESC, c.cell) AS crnk
           FROM nw v, cents c),
         assignedw AS (SELECT cell, vec_id AS neighbor_id,
                         embedding AS e_c, nrm AS n_c
@@ -6985,7 +6402,7 @@ object Similarity {
         ivfw AS (SELECT query_id, neighbor_id FROM (
             SELECT p.query_id, a.neighbor_id,
               row_number() OVER (PARTITION BY p.query_id ORDER BY
-                ${dot("p.e_q", "a.e_c")} / (p.n_q * a.n_c) DESC,
+                ${dotSql("p.e_q", "a.e_c")} / (p.n_q * a.n_c) DESC,
                 a.neighbor_id) AS rnk
             FROM probesw p JOIN assignedw a ON p.cell = a.cell
             WHERE p.query_id <> a.neighbor_id)
@@ -6994,8 +6411,8 @@ object Similarity {
         sq8pre AS (SELECT query_id, neighbor_id FROM (
             SELECT q.vec_id AS query_id, d.vec_id AS neighbor_id,
               row_number() OVER (PARTITION BY q.vec_id ORDER BY
-                (${dot("q.embedding", "d.d")}
-                   / (q.nrm * sqrt(${dot("d.d", "d.d")}))) DESC,
+                (${dotSql("q.embedding", "d.d")}
+                   / (q.nrm * sqrt(${dotSql("d.d", "d.d")}))) DESC,
                 d.vec_id) AS r
             FROM nw q, dqw d
             WHERE q.vec_id < $nQueries AND d.vec_id <> q.vec_id)
@@ -7011,7 +6428,7 @@ object Similarity {
         coded AS (SELECT vec_id, m, kk FROM (
                     SELECT sub.vec_id, sub.m, cb.kk,
                       row_number() OVER (PARTITION BY sub.vec_id, sub.m
-                        ORDER BY (${dot("sub.s", "cb.cv")} + cb.bias)
+                        ORDER BY (${dotSql("sub.s", "cb.cv")} + cb.bias)
                           DESC, cb.kk) AS r
                     FROM sub JOIN cb ON cb.m = sub.m)
                   WHERE r = 1),
@@ -7044,11 +6461,7 @@ object Similarity {
     * code runs once per session), variance/λ recomputed FROM DATA with
     * the identical decimal-sum arithmetic. */
   def embeddingPcaOracle(iters: Int = 5): String = {
-    val spark = SparkSession.getActiveSession.getOrElse(
-      graft.Tables.configure(SparkSession.builder().master("local[2]")
-        .config("spark.ui.enabled", "false")).getOrCreate())
-    val sfDir = sys.props.getOrElse("graft.oracle.sfdir",
-      "/root/testdata/sf0.01")
+    val (spark, sfDir) = Tables.oracleSession()
     val (mu, pc) = trainPc1(
       graft.Tables.load(spark, sfDir, "embeddings").select(col("embedding")),
       iters)
@@ -7168,10 +6581,10 @@ object Similarity {
                                 queries: DataFrame, nProbe: Int = 4,
                                 k: Int = 5): DataFrame = {
     val (mu, pc) = readWhitenModel(spark, dir)
-    serveFromIndexUnchecked(spark, dir,
-      whitenVectors(queries.select(col("vec_id"), col("embedding")),
-        mu, pc),
-      nProbe, k)
+    val (cents, lists) = indexLists(spark, dir, raw = false)
+    rankTopK(candidates(lists, probeFrame(
+      whitenVectors(queries.select(col("vec_id"), col("embedding")), mu, pc),
+      cents, nProbe, l2norm(col("embedding"))), exactCos), k)
   }
 
   /** Incremental maintenance of the whitened artifact: a RAW delta
@@ -7201,16 +6614,10 @@ object Similarity {
     * hand-wired by the pipeline. */
   def annIvfWhitenedIndexed(spark: SparkSession, sfDir: String,
                             nProbe: Int = 4, nQueries: Int = 10,
-                            k: Int = 5): DataFrame = {
-    val dir = ExportImport.scratch(
-      s"ivf-whiten-index/run-${java.util.UUID.randomUUID()}")
-    ivfWhitenIndexToDir(spark, sfDir, dir)
-    annServeWhitenedFromIndex(spark, dir,
-      Tables.load(spark, sfDir, "embeddings")
-        .filter(col("vec_id") < nQueries)
-        .select(col("vec_id"), col("embedding")),
-      nProbe, k)
-  }
+                            k: Int = 5): DataFrame =
+    serveFreshIndex(spark, sfDir, "ivf-whiten-index", nQueries)(
+      ivfWhitenIndexToDir(spark, sfDir, _))(
+      annServeWhitenedFromIndex(spark, _, _, nProbe, k))
 
   /** DuckDB oracle for [[annIvfWhitenedIndexed]]: μ/pc and the
     * whitened-space centroids inlined as trained literals (all
@@ -7222,19 +6629,12 @@ object Similarity {
   def ivfWhitenedOracle(nProbe: Int = 4, nQueries: Int = 10,
                         k: Int = 5, nCells: Int = 16,
                         iters: Int = 5): String = {
-    val spark = SparkSession.getActiveSession.getOrElse(
-      graft.Tables.configure(SparkSession.builder().master("local[2]")
-        .config("spark.ui.enabled", "false")).getOrCreate())
-    val sfDir = sys.props.getOrElse("graft.oracle.sfdir",
-      "/root/testdata/sf0.01")
+    val (spark, sfDir) = Tables.oracleSession()
     val raw = Tables.load(spark, sfDir, "embeddings")
       .select(col("vec_id"), col("embedding"))
     val (mu, pc) = trainWhitening(raw, iters)
     val w = whitenVectors(raw, mu, pc)
     val cents = withTrainCache(w)(trainCentroids(_, nCells))
-    val dot = (a: String, b: String) =>
-      s"""list_reduce(list_transform(list_zip($a, $b),
-          x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)), (p, q) -> p + q)"""
     val muL = mu.mkString("[", ", ", "]")
     val pcL = pc.mkString("[", ", ", "]")
     val centRows = cents.zipWithIndex.map { case (c, i) =>
@@ -7248,15 +6648,15 @@ object Similarity {
             list_transform(list_zip(diff, $pcL),
               x -> CAST(x[1] AS DOUBLE) - s * CAST(x[2] AS DOUBLE))
               AS embedding
-          FROM (SELECT vec_id, diff, ${dot("diff", pcL)} AS s FROM wd)),
+          FROM (SELECT vec_id, diff, ${dotSql("diff", pcL)} AS s FROM wd)),
         nw AS (SELECT vec_id, embedding,
-                 sqrt(${dot("embedding", "embedding")}) AS nrm
+                 sqrt(${dotSql("embedding", "embedding")}) AS nrm
                FROM wemb),
         cents(cell, cv) AS (VALUES $centRows),
         ranked AS (
           SELECT v.vec_id, v.embedding, v.nrm, c.cell,
             row_number() OVER (PARTITION BY v.vec_id ORDER BY
-              ${dot("v.embedding", "c.cv")} DESC, c.cell) AS crnk
+              ${dotSql("v.embedding", "c.cv")} DESC, c.cell) AS crnk
           FROM nw v, cents c),
         assigned AS (SELECT cell, vec_id AS neighbor_id, embedding AS e_c,
                        nrm AS n_c FROM ranked WHERE crnk = 1),
@@ -7265,9 +6665,9 @@ object Similarity {
                    FROM ranked WHERE crnk <= $nProbe AND vec_id < $nQueries)
         SELECT query_id, neighbor_id, rnk, round(cos, 6) AS cos6 FROM (
           SELECT p.query_id, a.neighbor_id,
-            ${dot("p.e_q", "a.e_c")} / (p.n_q * a.n_c) AS cos,
+            ${dotSql("p.e_q", "a.e_c")} / (p.n_q * a.n_c) AS cos,
             CAST(row_number() OVER (PARTITION BY p.query_id ORDER BY
-              ${dot("p.e_q", "a.e_c")} / (p.n_q * a.n_c) DESC,
+              ${dotSql("p.e_q", "a.e_c")} / (p.n_q * a.n_c) DESC,
               a.neighbor_id) AS INTEGER) AS rnk
           FROM probes p JOIN assigned a ON p.cell = a.cell
           WHERE p.query_id <> a.neighbor_id)

@@ -2042,11 +2042,7 @@ object TextAnalysis {
   def unigramTrainedOracle(vocabSize: Int = 120, maxPieceLen: Int = 4,
                            iters: Int = 2,
                            maxWords: Int = 2000): String = {
-    val spark = SparkSession.getActiveSession.getOrElse(
-      graft.Tables.configure(SparkSession.builder().master("local[2]")
-        .config("spark.ui.enabled", "false")).getOrCreate())
-    val sfDir = sys.props.getOrElse("graft.oracle.sfdir",
-      "/root/testdata/sf0.01")
+    val (spark, sfDir) = Tables.oracleSession()
     val lp = sharedUnigramLp(spark, sfDir, vocabSize, maxPieceLen, iters,
       maxWords)
     s"""WITH ${unigramEncCte(lp, maxPieceLen, "uenc")}
@@ -2113,11 +2109,7 @@ object TextAnalysis {
   def tokenizerFertilityOracle(nMerges: Int = 5, maxWords: Int = 2000,
                                vocabSize: Int = 120, maxPieceLen: Int = 4,
                                iters: Int = 2): String = {
-    val spark = SparkSession.getActiveSession.getOrElse(
-      graft.Tables.configure(SparkSession.builder().master("local[2]")
-        .config("spark.ui.enabled", "false")).getOrCreate())
-    val sfDir = sys.props.getOrElse("graft.oracle.sfdir",
-      "/root/testdata/sf0.01")
+    val (spark, sfDir) = Tables.oracleSession()
     val lp = sharedUnigramLp(spark, sfDir, vocabSize, maxPieceLen, iters,
       maxWords)
     def branch(encName: String, tok: String) =

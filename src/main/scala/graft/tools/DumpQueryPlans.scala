@@ -9,22 +9,39 @@ import graft.{SparkEntry, Tables}
   * evidence format (`plans/rNN/<query>_{before,after}.txt`).
   *
   * Args: `-sf <dir>` (default /root/testdata/sf0.1), `-out <dir>`,
-  * `-suffix <before|after>` (default after), then query names.
-  * Session shape matches [[DumpPlans]] (local[8], 8 shuffle
-  * partitions) so the two artifacts stay comparable. */
+  * `-suffix <before|after>` (default after), and query names, in any
+  * order ([[parseArgs]]). Session shape matches [[DumpPlans]]
+  * (local[8], 8 shuffle partitions) so the two artifacts stay
+  * comparable. */
 object DumpQueryPlans {
-  def main(args: Array[String]): Unit = {
-    def flag(name: String): Option[String] =
-      args.indexOf(name) match {
-        case -1 => None
-        case i => args.lift(i + 1)
+  private val flags = Set("-sf", "-out", "-suffix")
+
+  /** Left to right: a known flag consumes the argument after it as its
+    * value (a later repeat wins); every other argument is a query name,
+    * so a name equal to some flag's value is still kept. An unknown
+    * `-flag` or a flag without a value is refused. Returns
+    * (flag → value, query names in order). */
+  private[graft] def parseArgs(args: Seq[String])
+      : (Map[String, String], Seq[String]) = {
+    @annotation.tailrec
+    def go(rest: List[String], vals: Map[String, String],
+           names: Vector[String]): (Map[String, String], Seq[String]) =
+      rest match {
+        case Nil => (vals, names)
+        case f :: tail if f.startsWith("-") =>
+          require(flags(f), s"unknown flag $f (known: ${flags.mkString(" ")})")
+          require(tail.nonEmpty, s"flag $f needs a value")
+          go(tail.tail, vals + (f -> tail.head), names)
+        case name :: tail => go(tail, vals, names :+ name)
       }
-    val sfDir = flag("-sf").getOrElse("/root/testdata/sf0.1")
-    val outDir = flag("-out").getOrElse(sys.props("user.dir") + "/plans/tmp")
-    val suffix = flag("-suffix").getOrElse("after")
-    val flagVals =
-      Seq(flag("-sf"), flag("-out"), flag("-suffix")).flatten.toSet
-    val names = args.filterNot(_.startsWith("-")).filterNot(flagVals)
+    go(args.toList, Map.empty, Vector.empty)
+  }
+
+  def main(args: Array[String]): Unit = {
+    val (vals, names) = parseArgs(args.toSeq)
+    val sfDir = vals.getOrElse("-sf", "/root/testdata/sf0.1")
+    val outDir = vals.getOrElse("-out", sys.props("user.dir") + "/plans/tmp")
+    val suffix = vals.getOrElse("-suffix", "after")
     require(names.nonEmpty, "no query names given")
 
     val spark = Tables.configure(SparkSession.builder()

@@ -728,15 +728,21 @@ class SimilaritySpec extends SparkSpec {
     Similarity.ivfIndexAppend(spark, dir, embs.filter(isDelta))
 
     val queries = embs.filter(col("vec_id") < 10)
-    val appended = Similarity.annServeFromIndex(spark, dir, queries)
-      .collect().map(_.toString).toSeq
     // rebuild from scratch over the full vector set
     val full = graft.operators.ExportImport.scratch("ivf-index-full")
     Similarity.ivfIndexToDir(spark, sf, full)
-    val rebuilt = Similarity.annServeFromIndex(spark, full, queries)
-      .collect().map(_.toString).toSeq
-    assert(appended == rebuilt,
-      "append must serve identically to a full rebuild")
+    // every serving verb reads the same artifact lists: raw top-k, the
+    // sq8 two-stage scan and the MMR re-rank
+    Seq[(String, String => org.apache.spark.sql.DataFrame)](
+      "serve" -> (d => Similarity.annServeFromIndex(spark, d, queries)),
+      "sq8" -> (d => Similarity.annServeSq8FromIndex(spark, d, queries)),
+      "mmr" -> (d => Similarity.annMmrFromIndex(spark, d, queries))
+    ).foreach { case (name, serve) =>
+      val appended = serve(dir).collect().map(_.toString).toSeq
+      val rebuilt = serve(full).collect().map(_.toString).toSeq
+      assert(appended == rebuilt && appended.nonEmpty,
+        s"$name: append must serve identically to a full rebuild")
+    }
   }
 
   test("ivfIndexCompact: serving identical before/after, deltas folded, " +
@@ -1424,6 +1430,16 @@ class SimilaritySpec extends SparkSpec {
     Seq[(String, () => Any)](
       "serve" -> (() =>
         Similarity.annServeFromIndex(spark, dir, queries).collect()),
+      "sq8-serve" -> (() =>
+        Similarity.annServeSq8FromIndex(spark, dir, queries).collect()),
+      "mmr" -> (() =>
+        Similarity.annMmrFromIndex(spark, dir, queries).collect()),
+      "mmr-sq8" -> (() =>
+        Similarity.annMmrSq8FromIndex(spark, dir, queries).collect()),
+      "pq-serve" -> (() =>
+        Similarity.annServeFromPqIndex(spark, dir, queries).collect()),
+      "mmr-pq" -> (() =>
+        Similarity.annMmrPqFromIndex(spark, dir, queries).collect()),
       "append" -> (() => Similarity.ivfIndexAppend(spark, dir, queries)),
       "pq-leg" -> (() => Similarity.ivfPqIndexAdd(spark, dir)),
       "rebuild" -> (() => Similarity.ivfIndexRebuild(spark, dir))
